@@ -222,11 +222,17 @@ def _lower(facet: S.Facet, c: Column, column: str) -> Tuple[Column, str]:
         # cast, then value-space bounds.  A non-castable value yields NULL
         # (no bit set) — BuiltinLexical owns the malformed-lexical report.
         d = c.cast("string").try_cast("decimal(38,0)")
+
+        def bound(n: int) -> Column:
+            # decimal literal from the digit string: a raw Python int past
+            # the JVM long range (xs:unsignedLong's 2**64-1) overflows Py4J
+            return F.lit(str(n)).cast("decimal(38,0)")
+
         pred = F.lit(True)
         if facet.lo is not None:
-            pred = pred & (d >= facet.lo)
+            pred = pred & (d >= bound(facet.lo))
         if facet.hi is not None:
-            pred = pred & (d <= facet.hi)
+            pred = pred & (d <= bound(facet.hi))
         return _null_ok(c, pred), (
             f"value out of the builtin integer range "
             f"[{facet.lo}, {facet.hi}]"

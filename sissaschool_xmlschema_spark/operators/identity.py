@@ -26,11 +26,33 @@ All violations land in the engine's canonical violation schema
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+from typing import Tuple
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.facets import truncate_value
+
+
+@dataclass(frozen=True)
+class UniqueTrees:
+    """Constant Column trees of one xs:unique / xs:key duplicate check:
+    the counted rows, the grouping key and the violation select list over
+    the duplicate counts."""
+
+    counted: Column
+    keys: Tuple[str, ...]
+    select: Tuple[Column, ...]
+
+
+@dataclass(frozen=True)
+class KeyMissingTrees:
+    """Constant Column trees of one xs:key missing-field check."""
+
+    missing: Column
+    select: Tuple[Column, ...]
 
 
 def _tuple_repr(fields) -> F.Column:
@@ -40,8 +62,8 @@ def _tuple_repr(fields) -> F.Column:
     )
 
 
-def _violation_select(df: DataFrame, scope: str | None, order: str | None,
-                      fields, path: str, cid: str, reason: F.Column) -> DataFrame:
+def _violation_cols(scope: str | None, order: str | None, fields, path: str,
+                    cid: str, reason: F.Column) -> Tuple[Column, ...]:
     scope_col = (
         F.col(scope).cast("string") if scope else F.lit(None).cast("string")
     )
@@ -50,7 +72,7 @@ def _violation_select(df: DataFrame, scope: str | None, order: str | None,
         if order and order in fields
         else F.lit(None).cast("long")
     )
-    return df.select(
+    return (
         scope_col.alias("conv_id"),
         order_col.alias("turn_idx"),
         F.lit(path).alias("path"),
@@ -58,6 +80,28 @@ def _violation_select(df: DataFrame, scope: str | None, order: str | None,
         _tuple_repr(fields).alias("offending_value"),
         reason.alias("reason"),
     )
+
+
+def _counted_rows(c: S.Unique) -> Column:
+    """Rows an identity counter sees: the selector's rows minus any tuple
+    with a null field (null-tuple skip rule, elements.py:912)."""
+    pred = F.expr(c.selector) if c.selector else F.lit(True)
+    for f in c.fields:
+        pred = pred & F.col(f).isNotNull()
+    return pred
+
+
+def _dups(df: DataFrame, counted: Column, keys) -> DataFrame:
+    return (
+        df.filter(counted)
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+    )
+
+
+def _unique_keys(c: S.Unique) -> Tuple[str, ...]:
+    return tuple(([c.scope] if c.scope else []) + list(c.fields))
 
 
 def unique_dups(df: DataFrame, c: S.Unique) -> DataFrame:
@@ -68,44 +112,45 @@ def unique_dups(df: DataFrame, c: S.Unique) -> DataFrame:
     (map-side) aggregation gives the salted two-phase shape for free because the
     grouping key includes the high-cardinality field tuple.
     """
-    selected = df.filter(F.expr(c.selector)) if c.selector else df
-    # null-tuple skip rule (elements.py:912): any null field → tuple not counted
-    non_null = selected
-    for f in c.fields:
-        non_null = non_null.filter(F.col(f).isNotNull())
-    keys = ([c.scope] if c.scope else []) + list(c.fields)
-    return (
-        non_null.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-    )
+    return _dups(df, _counted_rows(c), _unique_keys(c))
 
 
-def unique_violations(df: DataFrame, c: S.Unique, table: str,
-                      order_col: str | None = None) -> DataFrame:
-    """Duplicate field tuples for xs:unique / xs:key (identities.py:385-389)."""
+def unique_trees(c: S.Unique, table: str,
+                 order_col: str | None = None) -> UniqueTrees:
+    """Column trees of :func:`unique_violations`, built once per plan."""
     cid = f"{'key' if isinstance(c, S.Key) else 'unique'}:{c.name}"
-    path = f"{table}"
-    dups = unique_dups(df, c)
     reason = F.concat(
-        F.lit(f"duplicated value ("),
+        F.lit("duplicated value ("),
         _tuple_repr(c.fields),
         F.lit(f") for identity constraint '{c.name}' ("),
         F.col("_n").cast("string"),
         F.lit(" times)"),
     )
-    return _violation_select(dups, c.scope, order_col, c.fields, path, cid, reason)
+    return UniqueTrees(
+        counted=_counted_rows(c),
+        keys=_unique_keys(c),
+        select=_violation_cols(c.scope, order_col, c.fields, table, cid,
+                               reason),
+    )
 
 
-def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
-                                 order_col: str | None = None) -> DataFrame:
-    """xs:key rows with a missing field (identities.py:523-531)."""
-    cid = f"key:{c.name}:missing-field"
-    selected = df.filter(F.expr(c.selector)) if c.selector else df
+def apply_unique(df: DataFrame, trees: UniqueTrees) -> DataFrame:
+    return _dups(df, trees.counted, trees.keys).select(*trees.select)
+
+
+def unique_violations(df: DataFrame, c: S.Unique, table: str,
+                      order_col: str | None = None) -> DataFrame:
+    """Duplicate field tuples for xs:unique / xs:key (identities.py:385-389)."""
+    return apply_unique(df, unique_trees(c, table, order_col))
+
+
+def key_missing_trees(c: S.Key, table: str,
+                      order_col: str | None = None) -> KeyMissingTrees:
+    """Column trees of :func:`key_missing_field_violations`."""
+    selected = F.expr(c.selector) if c.selector else F.lit(True)
     any_null = F.lit(False)
     for f in c.fields:
         any_null = any_null | F.col(f).isNull()
-    missing = selected.filter(any_null)
     scope_col = (
         F.col(c.scope).cast("string") if c.scope else F.lit(None).cast("string")
     )
@@ -116,14 +161,27 @@ def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
         f"missing key field for identity constraint '{c.name}' "
         f"(fields {list(c.fields)})"
     )
-    return missing.select(
-        scope_col.alias("conv_id"),
-        order_expr.alias("turn_idx"),
-        F.lit(table).alias("path"),
-        F.lit(cid).alias("constraint_id"),
-        _tuple_repr(c.fields).alias("offending_value"),
-        reason.alias("reason"),
+    return KeyMissingTrees(
+        missing=selected & any_null,
+        select=(
+            scope_col.alias("conv_id"),
+            order_expr.alias("turn_idx"),
+            F.lit(table).alias("path"),
+            F.lit(f"key:{c.name}:missing-field").alias("constraint_id"),
+            _tuple_repr(c.fields).alias("offending_value"),
+            reason.alias("reason"),
+        ),
     )
+
+
+def apply_key_missing(df: DataFrame, trees: KeyMissingTrees) -> DataFrame:
+    return df.filter(trees.missing).select(*trees.select)
+
+
+def key_missing_field_violations(df: DataFrame, c: S.Key, table: str,
+                                 order_col: str | None = None) -> DataFrame:
+    """xs:key rows with a missing field (identities.py:523-531)."""
+    return apply_key_missing(df, key_missing_trees(c, table, order_col))
 
 
 def keyref_misses(df: DataFrame, c: S.Keyref,
@@ -215,4 +273,6 @@ def keyref_violations(df: DataFrame, c: S.Keyref, table: str,
         F.col("_n").cast("string"),
         F.lit(" times)"),
     )
-    return _violation_select(counted, c.scope, None, c.fields, table, cid, reason)
+    return counted.select(
+        *_violation_cols(c.scope, None, c.fields, table, cid, reason)
+    )

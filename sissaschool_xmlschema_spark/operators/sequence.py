@@ -14,9 +14,10 @@ All Occurs bounds are likewise fused into ONE groupBy with conditional sums
 
 from __future__ import annotations
 
-from typing import Sequence
+from dataclasses import dataclass
+from typing import Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
@@ -32,6 +33,27 @@ VIOLATION_COLS = (
 )
 
 
+@dataclass(frozen=True)
+class ModelWindowTrees:
+    """The window pass's constant Column trees: ``helpers`` (pass 1's
+    window columns) and ``select`` (pass 2's scope key plus exploded
+    violation structs)."""
+
+    helpers: Tuple[Column, ...]
+    select: Tuple[Column, ...]
+
+
+@dataclass(frozen=True)
+class OccursTrees:
+    """The occurrence stage's constant Column trees: the scope key, one
+    conditional count per bound (``_n_<i>``) and the bound check over
+    those counts."""
+
+    scope: str
+    aggs: Tuple[Column, ...]
+    bounds: Tuple[Column, ...]
+
+
 def model_window_violations(
     df: DataFrame,
     checks: Sequence[object],
@@ -42,7 +64,39 @@ def model_window_violations(
     fuse_occurs: bool = False,
 ) -> DataFrame | None:
     """All Contiguity / Monotone / FirstTurn / LastTurn / Transition checks in a
-    single window pass.
+    single window pass (:func:`model_window_trees` + :func:`apply_model_window`,
+    the pair ``validate`` runs with a compiled plan's trees)."""
+    trees = model_window_trees(checks, table, scope, order, tiebreakers,
+                               fuse_occurs)
+    return None if trees is None else apply_model_window(df, trees)
+
+
+def apply_model_window(df: DataFrame, trees: ModelWindowTrees) -> DataFrame:
+    """Run a window pass: materialize the helpers, then explode violations."""
+    return (
+        df.select("*", *trees.helpers)
+        .select(*trees.select)
+        .select(
+            "conv_id",
+            F.col("_v.tix").alias("turn_idx"),
+            "_v.path",
+            "_v.constraint_id",
+            "_v.offending_value",
+            "_v.reason",
+        )
+    )
+
+
+def model_window_trees(
+    checks: Sequence[object],
+    table: str,
+    scope: str,
+    order: str,
+    tiebreakers: Sequence[str] = (),
+    fuse_occurs: bool = False,
+) -> Optional[ModelWindowTrees]:
+    """Column trees of the window pass (None when ``checks`` has no window
+    check).
 
     Window expressions cannot appear inside the higher-order
     ``explode(filter(array(...)))`` projection, so this runs as two selects over
@@ -50,15 +104,16 @@ def model_window_violations(
     (one exchange + sort), pass 2 is a plain projection Catalyst fuses into it.
 
     ``fuse_occurs=True`` additionally evaluates every Occurs bound as a
-    whole-partition window aggregate emitted on the group's first row — the
-    occurrence stage then costs ZERO extra scans/shuffles because it rides the
-    same exchange+sort this pass already pays for (validate() uses this
-    whenever both stage kinds are present).
+    whole-partition window aggregate emitted on the group's first row, riding
+    the same exchange+sort.  ``validate`` leaves it off and runs the bounds
+    as their own groupBy instead (runner module docstring, stage C).
     """
+    occurs = [c for c in checks if isinstance(c, S.Occurs)] if fuse_occurs else []
+    if not occurs and all(isinstance(c, S.Occurs) for c in checks):
+        return None
     w = Window.partitionBy(scope).orderBy(order, *tiebreakers)
     wp = Window.partitionBy(scope)
 
-    occurs = [c for c in checks if isinstance(c, S.Occurs)] if fuse_occurs else []
     lag_cols = {order}
     needs_first = bool(occurs)
     needs_last = False
@@ -85,7 +140,6 @@ def model_window_violations(
         helpers.append(
             F.sum(F.when(F.expr(c.where), 1).otherwise(0)).over(wp).alias(f"_occ_{i}")
         )
-    staged = df.select("*", *helpers)
 
     prev_order = F.col(f"_prev_{order}")
     is_first = F.col("_lag1").isNull() if needs_first else None
@@ -205,19 +259,12 @@ def model_window_violations(
         return None
 
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
-    return (
-        staged.select(
+    return ModelWindowTrees(
+        helpers=tuple(helpers),
+        select=(
             F.col(scope).cast("string").alias("conv_id"),
             F.explode(arr).alias("_v"),
-        )
-        .select(
-            "conv_id",
-            F.col("_v.tix").alias("turn_idx"),
-            "_v.path",
-            "_v.constraint_id",
-            "_v.offending_value",
-            "_v.reason",
-        )
+        ),
     )
 
 
@@ -239,25 +286,43 @@ def occurs_violations(
     *reduce-side* partial row would otherwise pair with millions of map
     partials on one reducer.  Results are bit-identical with or without salt.
     """
+    trees = occurs_trees(checks, table, scope)
+    return None if trees is None else apply_occurs(df, trees, salt)
+
+
+def occurs_trees(
+    checks: Sequence[object], table: str, scope: str
+) -> Optional[OccursTrees]:
+    """Column trees of the occurrence stage (None without Occurs checks)."""
     occurs = [c for c in checks if isinstance(c, S.Occurs)]
     if not occurs:
         return None
-    aggs = [
-        F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
-        for i, c in enumerate(occurs)
-    ]
+    return OccursTrees(
+        scope=scope,
+        aggs=tuple(
+            F.sum(F.when(F.expr(c.where), 1).otherwise(0)).alias(f"_n_{i}")
+            for i, c in enumerate(occurs)
+        ),
+        bounds=_bound_select(occurs, table, scope),
+    )
+
+
+def apply_occurs(df: DataFrame, trees: OccursTrees, salt: int = 0) -> DataFrame:
+    """Count per scope group and check the bounds (``salt``: see
+    :func:`occurs_violations`)."""
+    scope = trees.scope
     if salt > 0:
         salt_key = F.pmod(
             F.xxhash64(F.col(scope), F.monotonically_increasing_id()),
             F.lit(salt),
         ).alias("_salt")
-        partial = df.groupBy(salt_key, F.col(scope)).agg(*aggs)
+        partial = df.groupBy(salt_key, F.col(scope)).agg(*trees.aggs)
         counts = partial.groupBy(scope).agg(
-            *[F.sum(f"_n_{i}").alias(f"_n_{i}") for i in range(len(occurs))]
+            *[F.sum(f"_n_{i}").alias(f"_n_{i}") for i in range(len(trees.aggs))]
         )
     else:
-        counts = df.groupBy(scope).agg(*aggs)
-    return occurs_violations_from_counts(counts, occurs, table, scope)
+        counts = df.groupBy(scope).agg(*trees.aggs)
+    return _explode_bounds(counts, trees.bounds)
 
 
 def occurs_violations_from_counts(
@@ -274,6 +339,14 @@ def occurs_violations_from_counts(
     reporting: the cross-batch analogue of the reference's identity-counter
     merge applied to particle occurrence bounds (particles.py:109-126 +
     schemas.py:1386-1389)."""
+    return _explode_bounds(counts, _bound_select(occurs, table, scope))
+
+
+def _bound_select(
+    occurs: Sequence[S.Occurs], table: str, scope: str
+) -> Tuple[Column, ...]:
+    """Select list over per-scope counts: the scope key, a NULL turn and
+    the exploded struct of every violated bound."""
     structs = []
     for i, c in enumerate(occurs):
         n = F.col(f"_n_{i}")
@@ -299,17 +372,18 @@ def occurs_violations_from_counts(
         )
     arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
     return (
-        counts.select(
-            F.col(scope).cast("string").alias("conv_id"),
-            F.lit(None).cast("long").alias("turn_idx"),
-            F.explode(arr).alias("_v"),
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            "_v.path",
-            "_v.constraint_id",
-            "_v.offending_value",
-            "_v.reason",
-        )
+        F.col(scope).cast("string").alias("conv_id"),
+        F.lit(None).cast("long").alias("turn_idx"),
+        F.explode(arr).alias("_v"),
+    )
+
+
+def _explode_bounds(counts: DataFrame, bounds: Tuple[Column, ...]) -> DataFrame:
+    return counts.select(*bounds).select(
+        "conv_id",
+        "turn_idx",
+        "_v.path",
+        "_v.constraint_id",
+        "_v.offending_value",
+        "_v.reason",
     )

@@ -7,18 +7,43 @@ identity / model check becomes a DataFrame-transform closure.  Nothing is interp
 per row at execution time — Catalyst compiles the Column predicates into whole-stage
 codegen, which is the engine's equivalent of the reference's validator-closure
 specialization (facets bind ``validate`` at parse time, facets.py:129-140).
+
+**Compile once, apply many.**  A :class:`CompiledPlan` also builds, when it is
+created, every stage's constant Column trees — the row-local masks, select
+list and violation array; the window helpers and violation array; the
+occurrence aggregates and bound structs; the unique/key counting predicates
+and select lists — and keeps them.  ``validate(df, plan)`` only applies them to
+``df``, so a plan compiled once serves any number of DataFrames (documents,
+partitions, micro-batches) without rebuilding a Column tree.  The trees name
+columns (``F.col``), never a DataFrame's attributes, which is what makes them
+reusable across inputs.  Callers that validate many inputs against one spec
+pass the plan, not the spec (``CompiledXsd.plan`` does this per table).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import List, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as Fn
 
 from sissaschool_xmlschema_spark import spec as S
-from sissaschool_xmlschema_spark.functions.facets import facet_id, lower_facet
+from sissaschool_xmlschema_spark.functions.facets import (
+    facet_id,
+    lower_facet,
+    truncate_value,
+)
+from sissaschool_xmlschema_spark.operators.identity import (
+    key_missing_trees,
+    unique_trees,
+)
+from sissaschool_xmlschema_spark.operators.sequence import (
+    ModelWindowTrees,
+    OccursTrees,
+    model_window_trees,
+    occurs_trees,
+)
 
 
 @dataclass
@@ -36,12 +61,47 @@ class RowCheck:
     value_col: str = None
 
 
+@dataclass(frozen=True)
+class RowLocalTrees:
+    """Stage A's constant Column trees (applied by
+    ``runner.row_local_violations``): ``head`` selects the keys, one 63-bit
+    violation mask per chunk of checks and the offending-value columns;
+    ``any_flag`` keeps rows with a set bit; ``explode`` turns a flagged
+    row's bits into violation structs."""
+
+    head: Tuple[Column, ...]
+    any_flag: Column
+    explode: Column
+
+
 @dataclass
 class CompiledPlan:
     spec: S.TableSpec
     row_checks: List[RowCheck] = field(default_factory=list)
     identities: Tuple[object, ...] = ()
     model: Tuple[object, ...] = ()
+    # constant Column trees per stage, built once with the plan (module
+    # docstring); None where the spec has no check of that kind
+    row_local: Optional[RowLocalTrees] = field(init=False, repr=False)
+    model_window: Optional[ModelWindowTrees] = field(init=False, repr=False)
+    occurs: Optional[OccursTrees] = field(init=False, repr=False)
+    # parallel to ``identities``: (UniqueTrees, KeyMissingTrees) for a key,
+    # (UniqueTrees,) for a unique, () for a keyref (its join side varies)
+    identity_trees: Tuple[Tuple[object, ...], ...] = field(
+        init=False, repr=False
+    )
+
+    def __post_init__(self) -> None:
+        spec = self.spec
+        self.row_local = row_local_trees(spec, self.row_checks)
+        self.model_window = model_window_trees(
+            self.model, spec.name, spec.scope_col, spec.order_col,
+            tuple(spec.tiebreakers),
+        )
+        self.occurs = occurs_trees(self.model, spec.name, spec.scope_col)
+        self.identity_trees = tuple(
+            _identity_trees(c, spec) for c in self.identities
+        )
 
     @property
     def check_ids(self) -> List[str]:
@@ -129,4 +189,81 @@ def compile_plan(spec: S.TableSpec) -> CompiledPlan:
         row_checks=row_checks,
         identities=tuple(spec.identities),
         model=tuple(spec.model),
+    )
+
+
+def _identity_trees(c, spec: S.TableSpec) -> Tuple[object, ...]:
+    if isinstance(c, S.Key):
+        return (
+            unique_trees(c, spec.name, spec.order_col),
+            key_missing_trees(c, spec.name, spec.order_col),
+        )
+    if isinstance(c, S.Unique):
+        return (unique_trees(c, spec.name, spec.order_col),)
+    if isinstance(c, S.Keyref):
+        return ()
+    raise ValueError(f"unknown identity constraint {c!r}")
+
+
+def row_local_trees(
+    spec: S.TableSpec, row_checks: List[RowCheck]
+) -> Optional[RowLocalTrees]:
+    """Stage A's Column trees for ``row_checks`` (None when there are none).
+
+    Two-phase shape for allocation economy: phase 1 evaluates every predicate
+    into one LONG bitmask — pure arithmetic, zero object allocation for the
+    (overwhelmingly common) clean rows, so 32 scan threads don't fight the GC.
+    Phase 2 builds the violation structs only for rows whose mask ≠ 0 (the
+    explode's input array exists only on that ~1% subset).  A naive
+    struct-array-per-row projection measured 2.5x SLOWER at high thread counts
+    purely from allocation pressure.
+    """
+    if not row_checks:
+        return None
+    # one 63-bit mask column per chunk of checks (a LONG holds 63 usable bits;
+    # wider specs just get a second mask in the same projection)
+    chunks = [row_checks[i: i + 63] for i in range(0, len(row_checks), 63)]
+    zero = Fn.lit(0).cast("long")
+    one = Fn.lit(1).cast("long")
+    masks = []
+    for ci, chunk in enumerate(chunks):
+        mask = zero
+        for i, chk in enumerate(chunk):
+            mask = mask + Fn.when(
+                ~chk.ok, Fn.shiftleft(one, i)
+            ).otherwise(zero)
+        masks.append(mask.alias(f"_m{ci}"))
+
+    any_flag = Fn.col("_m0") > 0
+    for ci in range(1, len(chunks)):
+        any_flag = any_flag | (Fn.col(f"_m{ci}") > 0)
+
+    value_cols = sorted({chk.value_col for chk in row_checks if chk.value_col})
+    head = (
+        Fn.col(spec.scope_col).cast("string").alias("conv_id"),
+        Fn.col(spec.order_col).try_cast("long").alias("turn_idx"),
+        *masks,
+        *[Fn.col(c).alias(f"_val_{c}") for c in value_cols],
+    )
+
+    structs = [
+        Fn.when(
+            Fn.shiftright(Fn.col(f"_m{ci}"), i).bitwiseAND(Fn.lit(1)) == 1,
+            Fn.struct(
+                Fn.lit(chk.path).alias("path"),
+                Fn.lit(chk.constraint_id).alias("constraint_id"),
+                truncate_value(
+                    Fn.col(f"_val_{chk.value_col}")
+                    if chk.value_col
+                    else Fn.lit(None).cast("string")
+                ).alias("offending_value"),
+                Fn.lit(chk.reason).alias("reason"),
+            ),
+        )
+        for ci, chunk in enumerate(chunks)
+        for i, chk in enumerate(chunk)
+    ]
+    arr = Fn.filter(Fn.array(*structs), lambda x: x.isNotNull())
+    return RowLocalTrees(
+        head=head, any_flag=any_flag, explode=Fn.explode(arr).alias("_v")
     )

@@ -1,16 +1,22 @@
 """Plan execution — the distributed ``iter_errors`` / ``validate`` analogue.
 
 One logical job, four stages (SURVEY.md §3.2), all declared via the DataFrame API so
-Catalyst fuses/pushes/prunes:
+Catalyst fuses/pushes/prunes.  Each stage applies Column trees the
+:class:`CompiledPlan` built once (plans/compiler.py); the standalone stage
+functions (``model_window_violations``, ``occurs_violations``,
+``unique_violations``, ...) build the same trees and run the same apply:
 
 * **stage A** — every row-local facet check in ONE projection pass compiled to a
   violation *bitmask* (zero allocation on clean rows); violation structs are built
   and exploded only for flagged rows.  The scan reads only the columns the checks
   reference (column pruning) and whole-stage codegen evaluates all predicates in
   one pass.
-* **stage B** — all window/model checks in one window pass (one exchange+sort on
-  the scope key); occurrence bounds are fused into the same pass as
-  whole-partition window aggregates, so stage C costs no extra scan or shuffle.
+* **stage B** — all ordered window/model checks in one window pass (one
+  exchange+sort on the scope key; no exchange on a scope-bucketed layout).
+* **stage C** — occurrence bounds in their own groupBy(scope) with conditional
+  sums (PLANS.md §2b): a whole-partition window aggregate in stage B would
+  need a second WindowExec, measured slower than this map-side-combined
+  aggregate.
 * **stage D** — identity constraints: unique/key groupBys and keyref anti-joins
   (broadcast where the spec says the key side is small).
 
@@ -30,15 +36,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sissaschool_xmlschema_spark import spec as S
-from sissaschool_xmlschema_spark.functions.facets import truncate_value
 from sissaschool_xmlschema_spark.operators.identity import (
-    key_missing_field_violations,
+    apply_key_missing,
+    apply_unique,
     keyref_violations,
-    unique_violations,
 )
 from sissaschool_xmlschema_spark.operators.sequence import (
-    model_window_violations,
-    occurs_violations,
+    apply_model_window,
+    apply_occurs,
 )
 from sissaschool_xmlschema_spark.plans.compiler import CompiledPlan, compile_plan
 
@@ -65,73 +70,16 @@ class SparkSchemaValidationError(Exception):
 
 
 def row_local_violations(df: DataFrame, plan: CompiledPlan) -> Optional[DataFrame]:
-    """Stage A: all facet checks in one projection (scan-fused, codegen'd).
-
-    Two-phase shape for allocation economy: phase 1 evaluates every predicate
-    into one LONG bitmask — pure arithmetic, zero object allocation for the
-    (overwhelmingly common) clean rows, so 32 scan threads don't fight the GC.
-    Phase 2 builds the violation structs only for rows whose mask ≠ 0 (the
-    explode's input array exists only on that ~1% subset).  A naive
-    struct-array-per-row projection measured 2.5x SLOWER at high thread counts
-    purely from allocation pressure.
-    """
-    if not plan.row_checks:
+    """Stage A: all facet checks in one projection (scan-fused, codegen'd),
+    applying the plan's prebuilt bitmask trees (``compiler.row_local_trees``
+    documents the two-phase shape)."""
+    t = plan.row_local
+    if t is None:
         return None
-    spec = plan.spec
-
-    # one 63-bit mask column per chunk of checks (a LONG holds 63 usable bits;
-    # wider specs just get a second mask in the same projection)
-    chunks = [
-        plan.row_checks[i: i + 63]
-        for i in range(0, len(plan.row_checks), 63)
-    ]
-    masks = []
-    for ci, chunk in enumerate(chunks):
-        mask = F.lit(0).cast("long")
-        for i, chk in enumerate(chunk):
-            mask = mask + F.when(
-                ~chk.ok, F.shiftleft(F.lit(1).cast("long"), i)
-            ).otherwise(F.lit(0).cast("long"))
-        masks.append(mask.alias(f"_m{ci}"))
-
-    any_flag = F.col("_m0") > 0
-    for ci in range(1, len(chunks)):
-        any_flag = any_flag | (F.col(f"_m{ci}") > 0)
-
-    value_cols = sorted(
-        {chk.value_col for chk in plan.row_checks if chk.value_col}
-    )
-    flagged = df.select(
-        F.col(spec.scope_col).cast("string").alias("conv_id"),
-        F.col(spec.order_col).try_cast("long").alias("turn_idx"),
-        *masks,
-        *[F.col(c).alias(f"_val_{c}") for c in value_cols],
-    ).filter(any_flag)
-
-    structs = [
-        F.when(
-            F.shiftright(F.col(f"_m{ci}"), i).bitwiseAND(F.lit(1)) == 1,
-            F.struct(
-                F.lit(chk.path).alias("path"),
-                F.lit(chk.constraint_id).alias("constraint_id"),
-                truncate_value(
-                    F.col(f"_val_{chk.value_col}")
-                    if chk.value_col
-                    else F.lit(None).cast("string")
-                ).alias("offending_value"),
-                F.lit(chk.reason).alias("reason"),
-            ),
-        )
-        for ci, chunk in enumerate(chunks)
-        for i, chk in enumerate(chunk)
-    ]
-    arr = F.filter(F.array(*structs), lambda x: x.isNotNull())
     return (
-        flagged.select(
-            "conv_id",
-            "turn_idx",
-            F.explode(arr).alias("_v"),
-        )
+        df.select(*t.head)
+        .filter(t.any_flag)
+        .select("conv_id", "turn_idx", t.explode)
         .select(
             "conv_id",
             "turn_idx",
@@ -347,46 +295,25 @@ def validate(
     parts: List[Optional[DataFrame]] = [row_local_violations(df, plan)]
     if guard_violations is not None:
         parts.append(guard_violations)
-    has_window = any(
-        not isinstance(c, S.Occurs) for c in plan.model
-    ) and bool(plan.model)
-    has_occurs = any(isinstance(c, S.Occurs) for c in plan.model)
-    if has_window:
-        # Occurs bounds run as their own groupBy rather than riding the
-        # window pass: a whole-partition window frame needs a SECOND
-        # WindowExec (different window spec → +40% on the window stage,
-        # measured at 80M rows), while the standalone groupBy is
-        # exchange-free on a scope-bucketed layout and one map-side-combined
-        # shuffle of tiny partials otherwise.  This also keeps occurrence
-        # bounds (a groupBy check) over the FULL input when the scope-size
-        # guard excludes oversized groups from the ordered pass.
-        parts.append(
-            model_window_violations(
-                window_input, plan.model, spec.name, spec.scope_col,
-                spec.order_col, tuple(spec.tiebreakers),
-                fuse_occurs=False,
-            )
-        )
-        if has_occurs:
-            parts.append(
-                occurs_violations(df, plan.model, spec.name, spec.scope_col)
-            )
-    elif has_occurs:
-        parts.append(
-            occurs_violations(df, plan.model, spec.name, spec.scope_col)
-        )
-    for c in plan.identities:
-        if isinstance(c, S.Key):
-            parts.append(unique_violations(df, c, spec.name, spec.order_col))
-            parts.append(
-                key_missing_field_violations(df, c, spec.name, spec.order_col)
-            )
-        elif isinstance(c, S.Unique):
-            parts.append(unique_violations(df, c, spec.name, spec.order_col))
-        elif isinstance(c, S.Keyref):
+    # Occurs bounds run as their own groupBy rather than riding the window
+    # pass: a whole-partition window frame needs a SECOND WindowExec
+    # (different window spec → +40% on the window stage, measured at 80M
+    # rows), while the standalone groupBy is exchange-free on a
+    # scope-bucketed layout and one map-side-combined shuffle of tiny
+    # partials otherwise.  This also keeps occurrence bounds (a groupBy
+    # check) over the FULL input when the scope-size guard excludes
+    # oversized groups from the ordered pass.
+    if plan.model_window is not None:
+        parts.append(apply_model_window(window_input, plan.model_window))
+    if plan.occurs is not None:
+        parts.append(apply_occurs(df, plan.occurs))
+    for c, trees in zip(plan.identities, plan.identity_trees):
+        if isinstance(c, S.Keyref):
             parts.append(keyref_violations(df, c, spec.name))
-        else:
-            raise ValueError(f"unknown identity constraint {c!r}")
+            continue
+        parts.append(apply_unique(df, trees[0]))
+        if isinstance(c, S.Key):
+            parts.append(apply_key_missing(df, trees[1]))
     for pc in getattr(spec, "pandas_checks", ()):
         parts.append(pandas_check_violations(df, pc, spec))
     for gc in getattr(spec, "group_checks", ()):

@@ -29,6 +29,13 @@ DataFrame row = one container element; production corpora with enormous
 containers should land in parquet via ``rowTag=<row element>`` streaming
 (sources/xml_io.py) and validate tabularly.
 
+Per document, the driver sniffs the file once (:class:`_Document`: declared
+encoding, namespace map, prefixes, one container read per rowTag), applies
+the schema's compiled table plans (``CompiledXsd.plan``, built on the first
+document) and runs ONE exchange-free job: every table and the violation
+union sit in a single partition (:func:`_table_violations`), so the plan's
+groupBys and windows need no shuffle (PLANS.md §24).
+
 Beyond the flat subset, the reader resolves (r5): wildcard markers
 (``xs:any``/``xs:anyAttribute``/``xs:openContent`` gate the undeclared
 flags), ``mixed="true"`` char data, ``xsi:type`` overlays
@@ -65,8 +72,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sissaschool_xmlschema_spark.operators.identity import keyref_violations
-from sissaschool_xmlschema_spark.plans.runner import validate
-from sissaschool_xmlschema_spark.xsd_compile import CompiledXsd, compile_xsd
+from sissaschool_xmlschema_spark.plans.runner import VIOLATION_SCHEMA, validate
+from sissaschool_xmlschema_spark.xsd_compile import (
+    CompiledXsd,
+    compile_xsd,
+    declared_encoding,
+    text_codec,
+)
 
 
 def sniff_prefix(path: str, local_root: str) -> str:
@@ -79,11 +91,14 @@ def sniff_prefix(path: str, local_root: str) -> str:
     prolog must not defeat the sniff — a fixed-size head read silently
     falls back to no prefix and the rowTag never matches).
     """
+    return _prefix_of(path, local_root, _sniff_encoding(path))
+
+
+def _prefix_of(path: str, local_root: str, enc: str) -> str:
     pat = re.compile(
         rf"<(?:([A-Za-z_][\w.-]*):)?{re.escape(local_root)}[\s>/]"
     )
     tail = ""
-    enc = _sniff_encoding(path)
     with open(path, "rb") as f:
         while True:
             chunk = f.read(65536)
@@ -106,8 +121,15 @@ def sniff_nsmap(path: str) -> dict:
     Documents declaring namespaces deeper than the head are out of the
     sniff's reach — their wildcard checks fall back to prefix heuristics
     (an unmapped prefix counts as a foreign namespace)."""
+    return _nsmap_of(_head(path, _sniff_encoding(path)))
+
+
+def _head(path: str, enc: str) -> str:
     with open(path, "rb") as f:
-        head = f.read(65536).decode(_sniff_encoding(path), "replace")
+        return f.read(65536).decode(enc, "replace")
+
+
+def _nsmap_of(head: str) -> dict:
     nsmap: dict = {}
     for m in re.finditer(
         r"""xmlns(?::([A-Za-z_][\w.-]*))?\s*=\s*("([^"]*)"|'([^']*)')""",
@@ -117,16 +139,68 @@ def sniff_nsmap(path: str) -> dict:
     return nsmap
 
 
-def _sniff_root_local(path: str) -> str:
-    """Local name of the document's root element (driver-side head peek,
-    prolog/comments/DOCTYPE skipped)."""
-    with open(path, "rb") as f:
-        head = f.read(65536).decode(_sniff_encoding(path), "replace")
+def _root_local_of(head: str) -> str:
+    """Local name of the document's root element (prolog, comments and
+    DOCTYPE skipped)."""
     head = re.sub(r"<\?.*?\?>", "", head, flags=re.S)
     head = re.sub(r"<!--.*?-->", "", head, flags=re.S)
     head = re.sub(r"<!DOCTYPE[^>]*>", "", head, flags=re.S)
     m = re.search(r"<([A-Za-z_][\w.:-]*)", head)
     return m.group(1).rpartition(":")[-1] if m else "?"
+
+
+class _Document:
+    """One instance document and what the driver learns about it, each
+    at most once: its label, declared encoding, head, namespace map, and
+    the container reads (one Spark schema inference per container,
+    shared by every table rooted there)."""
+
+    def __init__(self, spark: SparkSession, path, prefix: Optional[str]):
+        self.spark = spark
+        self.path = str(path)
+        self.label = os.path.basename(self.path)
+        self.declared = _declared_encoding(self.path)
+        self.encoding = text_codec(self.declared)
+        self.prefix = prefix
+        self._head: Optional[str] = None
+        self._nsmap: Optional[dict] = None
+        self._containers: dict = {}
+
+    @property
+    def head(self) -> str:
+        if self._head is None:
+            self._head = _head(self.path, self.encoding)
+        return self._head
+
+    @property
+    def nsmap(self) -> dict:
+        if self._nsmap is None:
+            self._nsmap = _nsmap_of(self.head)
+        return self._nsmap
+
+    @property
+    def unknown_encoding(self) -> bool:
+        """True when the declaration names an encoding no codec here
+        decodes: a fatal error for an XML processor (XML 1.0 §4.3.3), and
+        Spark's parser, which honors the declaration, reads nothing."""
+        return self.declared is not None and self.encoding != self.declared
+
+    def container(self, local: str, preserve_space: bool = False) -> DataFrame:
+        """The document read with ``local`` (prefix sniffed) as rowTag."""
+        if self.unknown_encoding:
+            raise ValueError(
+                f"{self.path}: declared encoding {self.declared!r} is not "
+                "a known text encoding"
+            )
+        key = (local, preserve_space)
+        if key not in self._containers:
+            pfx = (self.prefix if self.prefix is not None
+                   else _prefix_of(self.path, local, self.encoding))
+            self._containers[key] = _read_container(
+                self.spark, self.path, f"{pfx}{local}", self.encoding,
+                preserve_space,
+            )
+        return self._containers[key]
 
 
 def _local_of(field_name: str) -> tuple:
@@ -228,16 +302,26 @@ def _collapse_model_errors(out: DataFrame, compiled) -> DataFrame:
         F.col("path").contains("/"),
         F.regexp_replace(F.col("path"), "/[^/]*$", ""),
     ).otherwise(bare)
+    # one window over the whole union: model rows rank within their
+    # container instance and only the first survives; every other row is
+    # in a partition of its own kind (is_model false) and passes untouched
     w = Window.partitionBy(
-        "conv_id", container, F.coalesce("turn_idx", F.lit(-1))
+        is_model, "conv_id", container, F.coalesce("turn_idx", F.lit(-1))
     ).orderBy("path", "constraint_id")
-    kept = (
-        out.filter(is_model)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+    return (
+        out.withColumn("_rn", F.row_number().over(w))
+        .filter(~is_model | (F.col("_rn") == 1))
         .drop("_rn")
     )
-    return out.filter(~is_model).unionByName(kept)
+
+
+def _table_violations(compiled, flat: DataFrame, spec, key=None) -> DataFrame:
+    """Violations of one flattened table of a document: the schema's
+    cached plan (``CompiledXsd.plan``) applied to the table held in ONE
+    partition.  A document is one file and Spark's XML source reads one
+    file as one partition, so this costs no parallelism, and every
+    groupBy and window of the plan then runs without an exchange."""
+    return validate(flat.coalesce(1), compiled.plan(spec, key)).violations
 
 
 def _viol(name, parent, cid, value, reason):
@@ -391,26 +475,26 @@ class _TableReader:
                 )
 
 
-def _sniff_encoding(path: str) -> str:
-    """Declared encoding from the XML prolog ('utf-8' when absent) — the
-    cp1252 menù document reads mojibake under Spark's UTF-8 default."""
+def _declared_encoding(path: str) -> Optional[str]:
     with open(path, "rb") as f:
-        head = f.read(200)
-    m = re.match(
-        rb"""[^>]{0,200}?encoding\s*=\s*["']([A-Za-z0-9._-]+)["']""",
-        head, re.S,
-    )
-    return m.group(1).decode("ascii") if m else "utf-8"
+        return declared_encoding(f.read(1024))
+
+
+def _sniff_encoding(path: str) -> str:
+    """Declared encoding from the XML prolog ('utf-8' when absent or
+    unknown) — the cp1252 menù document reads mojibake under Spark's UTF-8
+    default."""
+    return text_codec(_declared_encoding(path))
 
 
 def _read_container(
-    spark: SparkSession, path: str, row_tag: str,
+    spark: SparkSession, path: str, row_tag: str, encoding: str,
     preserve_space: bool = False,
 ) -> DataFrame:
     return (
         spark.read.format("xml")
         .option("rowTag", row_tag)
-        .option("charset", _sniff_encoding(path))
+        .option("charset", encoding)
         # keep stray character data visible instead of silently dropping
         # it; preserve_space keeps surrounding whitespace too (document
         # value of a whiteSpace=preserve simple type — issue_223)
@@ -453,7 +537,7 @@ def _xsi_local(col):
     return F.element_at(F.split(col.cast("string"), ":"), -1)
 
 
-def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
+def _flatten_nested(compiled, name, src: _Document):
     """One NESTED table's (flat DataFrame | None, [violation parts]):
     repeated elements below a row element, exploded level by level with
     the composite ``doc#parentIndex...`` landing in the ordinary scope
@@ -462,7 +546,8 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
     (elements.py:657-682)."""
     spec = compiled.specs[name]
     nested = compiled.nested_tables
-    nsmap = sniff_nsmap(xml_path)
+    nsmap = src.nsmap
+    doc = src.label
 
     # parent chain from the TOP row element down to this table
     chain = [name]
@@ -471,8 +556,7 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
     top = nested[chain[0]].parent_table
 
     parent = compiled.parent_of.get(name, top)
-    pfx = prefix if prefix is not None else sniff_prefix(xml_path, parent)
-    container = _read_container(spark, xml_path, f"{pfx}{parent}")
+    container = src.container(parent)
     fields = {f.name: f for f in container.schema.fields}
 
     # level 0: the top row element's rows with their ordinal
@@ -611,7 +695,7 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
                     for c in ov["spec"].columns
                 ], scope_val.alias(spec.scope_col),
                     order_val.alias(spec.order_col))
-                parts.append(validate(flat_o, ov["spec"]).violations)
+                parts.append(_table_violations(compiled, flat_o, ov["spec"]))
             parts.append(
                 rows.filter(
                     xcol.isNotNull() & ~xsi.isin(list(known))
@@ -654,15 +738,15 @@ def _flatten_nested(spark, xml_path, compiled, name, prefix, doc):
     return flat, parts
 
 
-def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
+def _flatten_one(compiled, name, src: _Document):
     """One table's (flat DataFrame | None, [structural violation parts])."""
     if name in getattr(compiled, "nested_tables", {}):
-        return _flatten_nested(spark, xml_path, compiled, name, prefix, doc)
+        return _flatten_nested(compiled, name, src)
     spec = compiled.specs[name]
+    doc = src.label
     parent = compiled.parent_of.get(name, name)
-    pfx = prefix if prefix is not None else sniff_prefix(xml_path, parent)
-    container = _read_container(
-        spark, xml_path, f"{pfx}{parent}",
+    container = src.container(
+        parent,
         preserve_space=name in getattr(compiled, "preserve_space",
                                        frozenset()),
     )
@@ -709,7 +793,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
         # the head's table for occurrence/identity checks
         members = getattr(compiled, "subst_overlays", {}).get(name, {})
         if members:
-            nsmap_m = sniff_nsmap(xml_path)
+            nsmap_m = src.nsmap
             for mname, mo in members.items():
                 mfield = next(
                     (fn for fn in fields
@@ -778,7 +862,8 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
                 )
                 if (spec_extra.columns or spec_extra.identities
                         or spec_extra.row_assertions):
-                    parts.append(validate(flat_m, spec_extra).violations)
+                    parts.append(_table_violations(
+                        compiled, flat_m, spec_extra, key=(name, mname)))
                 member_flats.append(flat_m)
 
         # locals may be qualified (elementFormDefault="qualified", vh:car)
@@ -878,7 +963,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
     # unknown xsi:type values are flagged and fall back to the base
     overlays = getattr(compiled, "xsi_overlays", {}).get(name, {})
     rtype0 = rows.schema["_row"].dataType
-    nsmap0 = sniff_nsmap(xml_path)
+    nsmap0 = src.nsmap
     if overlays and isinstance(rtype0, T.StructType):
         xf = _xsi_type_field(rtype0, nsmap0)
         if xf is not None:
@@ -914,7 +999,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
                     .withColumn(spec.order_col,
                                 F.monotonically_increasing_id())
                 )
-                parts.append(validate(flat_o, ov["spec"]).violations)
+                parts.append(_table_violations(compiled, flat_o, ov["spec"]))
             parts.append(
                 rows.filter(
                     xcol.isNotNull() & ~xsi.isin(list(known))
@@ -975,7 +1060,7 @@ def _flatten_one(spark, xml_path, compiled, name, prefix, doc):
                 .withColumn(spec.order_col,
                             F.monotonically_increasing_id())
             )
-            parts.append(validate(flat_a, arm["spec"]).violations)
+            parts.append(_table_violations(compiled, flat_a, arm["spec"]))
         rows = remaining
 
     rdr = _TableReader(
@@ -1051,12 +1136,10 @@ def xml_instance_tables(
         xsd_source if isinstance(xsd_source, CompiledXsd)
         else compile_xsd(xsd_source, base_dir=base_dir)
     )
-    doc = os.path.basename(str(xml_path))
+    src = _Document(spark, xml_path, prefix)
     out: dict = {}
     for name in sorted(compiled.specs):
-        flat, _parts = _flatten_one(
-            spark, xml_path, compiled, name, prefix, doc
-        )
+        flat, _parts = _flatten_one(compiled, name, src)
         if flat is not None:
             out[name] = flat
     return out
@@ -1113,32 +1196,38 @@ def validate_xml_instance(
         xsd_source if isinstance(xsd_source, CompiledXsd)
         else compile_xsd(xsd_source, base_dir=base_dir, version=version)
     )
+    src = _Document(spark, xml_path, prefix)
+    if src.unknown_encoding:
+        return _document_violation(
+            spark, src, _root_local_of(src.head), "structure:unknown-encoding",
+            src.declared,
+            f"declared encoding '{src.declared}' is not a known text "
+            "encoding (XML 1.0 §4.3.3: a fatal error)",
+        )
     if not compiled.specs:
         # an INAPPLICABLE schema (vc:minVersion gating, issue_349): no
         # declaration exists for the document root — one violation
-        root_local = _sniff_root_local(xml_path)
-        return spark.createDataFrame(
-            [(os.path.basename(str(xml_path)), None, root_local,
-              "structure:no-declaration", root_local,
-              f"no declaration available for document root "
-              f"'{root_local}' (schema inapplicable: "
-              f"{'; '.join(compiled.restrictions) or 'empty schema'})")],
-            "conv_id string, turn_idx bigint, path string, "
-            "constraint_id string, offending_value string, reason string",
+        root_local = _root_local_of(src.head)
+        return _document_violation(
+            spark, src, root_local, "structure:no-declaration", root_local,
+            f"no declaration available for document root "
+            f"'{root_local}' (schema inapplicable: "
+            f"{'; '.join(compiled.restrictions) or 'empty schema'})",
         )
     tables = [table] if table else sorted(compiled.specs)
-    doc = os.path.basename(str(xml_path))
     parts: list = []
     flats: dict = {}
     for name in tables:
-        flat, table_parts = _flatten_one(
-            spark, xml_path, compiled, name, prefix, doc
-        )
+        flat, table_parts = _flatten_one(compiled, name, src)
         parts.extend(table_parts)
         if flat is None:
             continue
-        flats[name] = flat
-        parts.append(validate(flat, compiled.specs[name]).violations)
+        # one partition, like every table the plan sees (_table_violations):
+        # the cross-table keyref joins below then need no exchange either
+        flats[name] = flat.coalesce(1)
+        parts.append(
+            _table_violations(compiled, flats[name], compiled.specs[name])
+        )
 
     # cross-table keyrefs (identities.py:317-334 refer_path analogue)
     for ext in compiled.external_keyrefs:
@@ -1170,15 +1259,20 @@ def validate_xml_instance(
         # a VALID document whose only row element is optional and absent:
         # zero violations in the canonical schema (mirrors decode's
         # empty-fields branch)
-        return spark.createDataFrame(
-            [],
-            "conv_id string, turn_idx bigint, path string, "
-            "constraint_id string, offending_value string, reason string",
-        )
+        return spark.createDataFrame([], VIOLATION_SCHEMA)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return _collapse_model_errors(out, compiled)
+    # the union's branches are one partition each; one task reads them all
+    # and the collapse window runs over that partition without an exchange
+    return _collapse_model_errors(out.coalesce(1), compiled)
+
+
+def _document_violation(spark, src: _Document, path, cid, value, reason):
+    """The one violation of a document that cannot be validated at all."""
+    return spark.createDataFrame(
+        [(src.label, None, path, cid, value, reason)], VIOLATION_SCHEMA
+    )
 
 
 def count_errors(

@@ -52,6 +52,7 @@ chain.
 
 from __future__ import annotations
 
+import codecs
 import io
 import os
 import re
@@ -186,6 +187,25 @@ class CompiledXsd:
     # default arm) + the overlay view dict.  First matching arm wins;
     # non-matching rows fall back to the declared type.
     alt_overlays: dict = field(default_factory=dict)
+    # cache key -> (spec, CompiledPlan), filled by plan()
+    _plans: dict = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def plan(self, spec: S.TableSpec, key=None):
+        """The compiled plan of ``spec`` (a table's spec or one of its
+        overlay specs), built on the first document that needs it and
+        reused by every later one: the schema compiles once, each document
+        only applies the plan (plans/compiler.py).  ``key`` names a spec
+        the caller derives anew per document; by default the spec object
+        itself is the key (this object owns it, so it stays alive)."""
+        from sissaschool_xmlschema_spark.plans.compiler import compile_plan
+
+        key = id(spec) if key is None else key
+        hit = self._plans.get(key)
+        if hit is None:
+            hit = self._plans[key] = (spec, compile_plan(spec))
+        return hit[1]
 
     def spec(self, name: Optional[str] = None) -> S.TableSpec:
         if name is None:
@@ -1023,6 +1043,33 @@ def _flatten_field(selector_rest: list, field_tokens: list) -> str:
 # ---------------------------------------------------------------------------
 
 
+_XML_DECL_ENCODING = re.compile(
+    rb"""\A(?:\xef\xbb\xbf)?\s*<\?xml\b[^>]*?\bencoding\s*=\s*"""
+    rb"""["']([A-Za-z0-9._-]+)["']"""
+)
+
+
+def declared_encoding(head: bytes) -> Optional[str]:
+    """The encoding named by the XML declaration that opens ``head``, or
+    None when there is none (an ``encoding``-suffixed attribute such as
+    ``dataEncoding="base64"`` on a prolog-less root is not one)."""
+    m = _XML_DECL_ENCODING.match(head)
+    return m.group(1).decode("ascii") if m else None
+
+
+def text_codec(name: Optional[str]) -> str:
+    """``name`` when Python knows it as a text codec, else 'utf-8'."""
+    if name is None:
+        return "utf-8"
+    try:
+        codecs.lookup(name)
+        # a bytes-to-bytes codec (base64, zlib) is no text encoding
+        b"<".decode(name, "replace")
+    except LookupError:
+        return "utf-8"
+    return name
+
+
 def read_xml_text(path) -> str:
     """Read an XML document honoring its DECLARED encoding (menù-cp1252:
     ``encoding='CP1252'`` — a UTF-8-only read raises UnicodeDecodeError on
@@ -1030,14 +1077,9 @@ def read_xml_text(path) -> str:
     with replacement."""
     with open(path, "rb") as f:
         data = f.read()
-    m = re.match(
-        rb"""[^>]{0,200}?encoding\s*=\s*["']([A-Za-z0-9._-]+)["']""",
-        data, re.S,
-    )
-    enc = m.group(1).decode("ascii") if m else "utf-8"
     try:
-        return data.decode(enc)
-    except (LookupError, UnicodeDecodeError):
+        return data.decode(text_codec(declared_encoding(data)))
+    except UnicodeDecodeError:
         return data.decode("utf-8", "replace")
 
 

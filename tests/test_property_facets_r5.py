@@ -4,17 +4,20 @@ hypothesis-generated lexical values:
 
 - ``IntRange`` (builtin integer widths) vs Python int bounds — including
   the non-castable-passes contract (malformed lexicals are
-  BuiltinLexical's violation, not IntRange's);
+  BuiltinLexical's violation, not IntRange's) and both boundaries of every
+  builtin width, xs:unsignedLong's 2**64-1 included;
 - hexBinary-canon ``Enumeration``/``FixedValue`` vs case-folded
   membership (value-space compare, issue_222);
 - ``ListOf`` item-count bounds folded from list-type length facets
   (issue_311) vs a whitespace-split count.
 """
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from sissaschool_xmlschema_spark import spec as S
+from sissaschool_xmlschema_spark.functions.lexical import INTEGER_RANGES
 from sissaschool_xmlschema_spark.plans.runner import validate
 
 _SETTINGS = dict(
@@ -61,6 +64,27 @@ def test_intrange_matches_python_bounds(spark, values):
     want = sum(oracle(v) for v in values)
     got = _count(spark, values, [S.IntRange(-128, 127)])
     assert got == want, (values, got, want)
+
+
+@pytest.mark.parametrize("type_name", sorted(INTEGER_RANGES))
+def test_intrange_builtin_width_boundaries(spark, type_name):
+    """Each bound itself passes and its neighbour outside the width fails;
+    an open side admits a value far past every fixed width."""
+    lo, hi = INTEGER_RANGES[type_name]
+    values, bad = [], set()
+    for bound, outside in ((lo, -1), (hi, 1)):
+        if bound is None:
+            values.append(str(outside * 10**30))
+        else:
+            values += [str(bound), str(bound + outside)]
+            bad.add(str(bound + outside))
+    df = spark.createDataFrame(
+        [("d", i, v) for i, v in enumerate(values)],
+        "doc string, pos int, v string",
+    )
+    rows = validate(df, _spec([S.IntRange(lo, hi)])).violations.collect()
+    assert {r["offending_value"] for r in rows} == bad
+    assert len(rows) == len(bad)
 
 
 hex_lexical = st.one_of(

@@ -92,3 +92,36 @@ def test_engine_matches_pandas_oracle(spark, rows):
     pdf["turn_idx"] = pdf["turn_idx"].astype("object")
     want = {k: v for k, v in count_violations(pdf, SPEC).items() if v}
     assert got == want, f"engine={got} oracle={want} rows={data}"
+
+
+def test_one_compiled_plan_serves_many_dataframes(spark):
+    """A plan's prebuilt Column trees name columns, not a DataFrame: one
+    ``compile_plan`` result validates two different inputs, each exactly
+    like the oracle."""
+    from sissaschool_xmlschema_spark.plans.compiler import compile_plan
+    from sissaschool_xmlschema_spark.sources.transcripts import (
+        corrupt_transcripts,
+        synthetic_transcripts,
+    )
+    from sissaschool_xmlschema_spark.spec import transcript_spec
+
+    spec = transcript_spec()
+    plan = compile_plan(spec)
+    first = corrupt_transcripts(
+        synthetic_transcripts(spark, n_convs=25, hot_convs=0), every=7
+    )
+    second = corrupt_transcripts(
+        synthetic_transcripts(spark, n_convs=15, seed=7, hot_convs=1,
+                              hot_turns=40),
+        every=5, seed=3,
+    )
+    for df in (first, second):
+        got = {
+            r["constraint_id"]: r["n_violations"]
+            for r in validate(df, plan).by_constraint().collect()
+        }
+        want = {
+            k: v for k, v in count_violations(df.toPandas(), spec).items()
+            if v
+        }
+        assert got and got == want

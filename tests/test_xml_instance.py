@@ -754,3 +754,150 @@ def test_declared_encoding_honored(spark):
     assert count_errors(
         spark, f"{d}menù-cp1252.xml", f"{d}menù-cp1252.xsd"
     ) == 0
+
+
+CATALOG_XSD = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:complexType name="ItemType">
+    <xs:sequence>
+      <xs:element name="name" type="xs:string"/>
+      <xs:element name="code" type="xs:string"/>
+      <xs:element name="color" minOccurs="0">
+        <xs:simpleType><xs:restriction base="xs:string">
+          <xs:enumeration value="red"/><xs:enumeration value="green"/>
+        </xs:restriction></xs:simpleType>
+      </xs:element>
+    </xs:sequence>
+    <xs:attribute name="id" type="xs:string"/>
+  </xs:complexType>
+  <xs:complexType name="GadgetType"><xs:complexContent>
+    <xs:extension base="ItemType">
+      <xs:attribute name="volts" type="xs:int" use="required"/>
+    </xs:extension></xs:complexContent>
+  </xs:complexType>
+  <xs:element name="item" type="ItemType"/>
+  <xs:element name="gadget" type="GadgetType" substitutionGroup="item"/>
+  <xs:element name="catalog">
+    <xs:complexType><xs:sequence>
+      <xs:element ref="item" maxOccurs="unbounded"/>
+    </xs:sequence></xs:complexType>
+    <xs:key name="item-id">
+      <xs:selector xpath="item"/><xs:field xpath="@id"/>
+    </xs:key>
+  </xs:element>
+</xs:schema>"""
+
+CATALOG_A = """<catalog>
+  <item id="a"><name>n1</name><code>c1</code><color>red</color></item>
+  <item id="a"><name>n2</name><code>c2</code></item>
+  <item><name>n3</name><code>c3</code></item>
+  <item id="b"/>
+  <item id="c"><name>n5</name><code>c5</code><color>blue</color></item>
+  <gadget id="d"><name>g</name><code>g1</code></gadget>
+</catalog>"""
+
+CATALOG_B = """<catalog>
+  <gadget id="x" volts="12"><name>g</name><code>g1</code></gadget>
+  <item id="y"><name>n</name></item>
+</catalog>"""
+
+# Derived from the schema: items are rows 0..4 of the document's item table
+# (turn_idx = row position), the gadget is row 0 of its member overlay.
+WANT_A = [
+    # duplicate key value 'a' (rows 0 and 1), reported once per tuple
+    ("a.xml", None, "item", "key:item-id", "a",
+     "duplicated value (a) for identity constraint 'item-id' (2 times)"),
+    # row 2 has no @id: a key field is missing
+    ("a.xml", 2, "item", "key:item-id:missing-field", "",
+     "missing key field for identity constraint 'item-id' (fields ['id'])"),
+    # row 3 misses both required children: ONE content-model error, the
+    # first in (path, constraint) order
+    ("a.xml", 3, "item/code", "facet:code:Required", None,
+     "missing required value for 'code'"),
+    # row 4: color outside the enumeration
+    ("a.xml", 4, "item/color", "facet:color:Enumeration", "blue",
+     "value must be one of ['red', 'green']"),
+    # the substitution member misses its own required attribute
+    ("a.xml", 0, "gadget/volts", "facet:volts:Required", None,
+     "missing required value for 'volts'"),
+]
+
+WANT_B = [
+    ("b.xml", 0, "item/code", "facet:code:Required", None,
+     "missing required value for 'code'"),
+]
+
+
+def _rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_document_runs_as_one_exchange_free_job(spark, tmp_path):
+    """One document: exact violation rows, no Exchange in the executed
+    plan, and at most two jobs (schema inference plus the result)."""
+    c = compile_xsd(CATALOG_XSD)
+    a = tmp_path / "a.xml"
+    a.write_text(CATALOG_A)
+    sc = spark.sparkContext
+    sc.setJobGroup("one-document", "one-document")
+    try:
+        v = validate_xml_instance(spark, str(a), c)
+        got = _rows(v)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == sorted(WANT_A, key=repr)
+    assert "Exchange" not in v._jdf.queryExecution().executedPlan().toString()
+    assert len(sc.statusTracker().getJobIdsForGroup("one-document")) <= 2
+
+
+def test_cached_plans_carry_no_document_state(spark, tmp_path):
+    """Documents validated in turn with ONE CompiledXsd (whose table plans
+    are built on the first document and reused) give exactly the rows of a
+    fresh compile per document."""
+    a, b = tmp_path / "a.xml", tmp_path / "b.xml"
+    a.write_text(CATALOG_A)
+    b.write_text(CATALOG_B)
+    shared = compile_xsd(CATALOG_XSD)
+    got_a = _rows(validate_xml_instance(spark, str(a), shared))
+    got_b = _rows(validate_xml_instance(spark, str(b), shared))
+    assert got_a == sorted(WANT_A, key=repr)
+    assert got_b == sorted(WANT_B, key=repr)
+    for path, got in ((a, got_a), (b, got_b)):
+        fresh = compile_xsd(CATALOG_XSD)
+        assert _rows(validate_xml_instance(spark, str(path), fresh)) == got
+
+
+FILES_XSD = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:element name="files"><xs:complexType>
+    <xs:sequence>
+      <xs:element name="file" type="xs:base64Binary" maxOccurs="unbounded"/>
+    </xs:sequence>
+    <xs:attribute name="dataEncoding" type="xs:string"/>
+  </xs:complexType></xs:element>
+</xs:schema>"""
+
+
+def test_prolog_less_data_encoding_attribute_is_no_codec(spark, tmp_path):
+    """Without an XML declaration the document is UTF-8: an attribute
+    whose name ends in 'encoding' names no codec."""
+    p = tmp_path / "files.xml"
+    p.write_text('<files dataEncoding="base64"><file>aGVsbG8=</file></files>')
+    assert sniff_prefix(str(p), "files") == ""
+    assert count_errors(spark, str(p), compile_xsd(FILES_XSD)) == 0
+
+
+def test_unknown_declared_codec_is_one_violation(spark, tmp_path):
+    """A declared encoding no codec decodes is a fatal error for an XML
+    processor (XML 1.0 4.3.3): the document validates to one
+    document-level violation instead of raising from a codec lookup."""
+    p = tmp_path / "files.xml"
+    p.write_text('<?xml version="1.0" encoding="x-no-such-codec"?>'
+                 "<files><file>aGVsbG8=</file></files>")
+    assert sniff_prefix(str(p), "files") == ""
+    rows = validate_xml_instance(spark, str(p), compile_xsd(FILES_XSD)) \
+        .collect()
+    assert [(r["conv_id"], r["path"], r["constraint_id"],
+             r["offending_value"]) for r in rows] == [
+        ("files.xml", "files", "structure:unknown-encoding",
+         "x-no-such-codec")]
