@@ -36,6 +36,13 @@ document) and runs ONE exchange-free job: every table and the violation
 union sit in a single partition (:func:`_table_violations`), so the plan's
 groupBys and windows need no shuffle (PLANS.md §24).
 
+Every table of a document, and every overlay of one (xsi:type, an
+``xs:alternative`` arm, a substitution member), is a compiled
+:class:`TableView` read by one function, :func:`_apply_view`: walk the
+row struct against the view's paths, flag what the walk finds
+structurally wrong, and select the view's columns with the caller's
+scope/order columns.
+
 Beyond the flat subset, the reader resolves (r5): wildcard markers
 (``xs:any``/``xs:anyAttribute``/``xs:openContent`` gate the undeclared
 flags), ``mixed="true"`` char data, ``xsi:type`` overlays
@@ -51,8 +58,8 @@ tables with whiteSpace=preserve, and ``vc:minVersion`` version gating.
 Reference parity pinned by tests/test_xml_instance.py +
 tests/test_wildcards_mixed.py: **every XML instance in the reference's
 testfiles list validates with exact parity — 57 of 57** (19 ``--errors=N``
-counts + 38 valid instances clean,
-/root/reference/tests/test_cases/testfiles); with the schema-document
+counts + 38 valid instances clean, the reference's
+tests/test_cases/testfiles); with the schema-document
 meta-validator (xsd_meta.py) all 49 ``--errors=N`` cases (instances +
 schema documents) reproduce exact counts.  The last two instance counts
 (model1, issue_029-2) are closed by ``_collapse_model_errors``: element
@@ -65,6 +72,8 @@ from __future__ import annotations
 
 import os
 import re
+from dataclasses import replace
+from functools import cached_property, reduce
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +84,7 @@ from sissaschool_xmlschema_spark.operators.identity import keyref_violations
 from sissaschool_xmlschema_spark.plans.runner import VIOLATION_SCHEMA, validate
 from sissaschool_xmlschema_spark.xsd_compile import (
     CompiledXsd,
+    TableView,
     compile_xsd,
     declared_encoding,
     text_codec,
@@ -91,26 +101,7 @@ def sniff_prefix(path: str, local_root: str) -> str:
     prolog must not defeat the sniff — a fixed-size head read silently
     falls back to no prefix and the rowTag never matches).
     """
-    return _prefix_of(path, local_root, _sniff_encoding(path))
-
-
-def _prefix_of(path: str, local_root: str, enc: str) -> str:
-    pat = re.compile(
-        rf"<(?:([A-Za-z_][\w.-]*):)?{re.escape(local_root)}[\s>/]"
-    )
-    tail = ""
-    with open(path, "rb") as f:
-        while True:
-            chunk = f.read(65536)
-            if not chunk:
-                return ""
-            head = tail + chunk.decode(enc, "replace")
-            m = pat.search(head)
-            if m:
-                return f"{m.group(1)}:" if m.group(1) else ""
-            # keep enough overlap that a tag split across the chunk
-            # boundary still matches on the next iteration
-            tail = head[-(len(local_root) + 64):]
+    return _Document(path).prefix_of(local_root)
 
 
 def sniff_nsmap(path: str) -> dict:
@@ -121,22 +112,7 @@ def sniff_nsmap(path: str) -> dict:
     Documents declaring namespaces deeper than the head are out of the
     sniff's reach — their wildcard checks fall back to prefix heuristics
     (an unmapped prefix counts as a foreign namespace)."""
-    return _nsmap_of(_head(path, _sniff_encoding(path)))
-
-
-def _head(path: str, enc: str) -> str:
-    with open(path, "rb") as f:
-        return f.read(65536).decode(enc, "replace")
-
-
-def _nsmap_of(head: str) -> dict:
-    nsmap: dict = {}
-    for m in re.finditer(
-        r"""xmlns(?::([A-Za-z_][\w.-]*))?\s*=\s*("([^"]*)"|'([^']*)')""",
-        head,
-    ):
-        nsmap.setdefault(m.group(1) or "", m.group(3) or m.group(4) or "")
-    return nsmap
+    return _Document(path).nsmap
 
 
 def _root_local_of(head: str) -> str:
@@ -153,30 +129,59 @@ class _Document:
     """One instance document and what the driver learns about it, each
     at most once: its label, declared encoding, head, namespace map, and
     the container reads (one Spark schema inference per container,
-    shared by every table rooted there)."""
+    shared by every table rooted there).  The sniffers use one without a
+    Spark session."""
 
-    def __init__(self, spark: SparkSession, path, prefix: Optional[str]):
+    def __init__(self, path, prefix: Optional[str] = None,
+                 spark: Optional[SparkSession] = None):
         self.spark = spark
         self.path = str(path)
         self.label = os.path.basename(self.path)
-        self.declared = _declared_encoding(self.path)
+        with open(self.path, "rb") as f:
+            self.declared = declared_encoding(f.read(1024))
+        # undeclared or unknown: UTF-8 (Spark's default would read the
+        # cp1252 menù document as mojibake)
         self.encoding = text_codec(self.declared)
         self.prefix = prefix
-        self._head: Optional[str] = None
-        self._nsmap: Optional[dict] = None
         self._containers: dict = {}
 
-    @property
+    @cached_property
     def head(self) -> str:
-        if self._head is None:
-            self._head = _head(self.path, self.encoding)
-        return self._head
+        """The first 64 KiB of the document, decoded."""
+        with open(self.path, "rb") as f:
+            return f.read(65536).decode(self.encoding, "replace")
 
-    @property
+    @cached_property
     def nsmap(self) -> dict:
-        if self._nsmap is None:
-            self._nsmap = _nsmap_of(self.head)
-        return self._nsmap
+        nsmap: dict = {}
+        for m in re.finditer(
+            r"""xmlns(?::([A-Za-z_][\w.-]*))?\s*=\s*("([^"]*)"|'([^']*)')""",
+            self.head,
+        ):
+            nsmap.setdefault(m.group(1) or "", m.group(3) or m.group(4) or "")
+        return nsmap
+
+    def prefix_of(self, local: str) -> str:
+        """The namespace prefix of the first ``local`` start tag ('vh:' or
+        ''), the ``prefix`` override when one was given."""
+        if self.prefix is not None:
+            return self.prefix
+        pat = re.compile(
+            rf"<(?:([A-Za-z_][\w.-]*):)?{re.escape(local)}[\s>/]"
+        )
+        tail = ""
+        with open(self.path, "rb") as f:
+            while True:
+                chunk = f.read(65536)
+                if not chunk:
+                    return ""
+                head = tail + chunk.decode(self.encoding, "replace")
+                m = pat.search(head)
+                if m:
+                    return f"{m.group(1)}:" if m.group(1) else ""
+                # keep enough overlap that a tag split across the chunk
+                # boundary still matches on the next iteration
+                tail = head[-(len(local) + 64):]
 
     @property
     def unknown_encoding(self) -> bool:
@@ -194,11 +199,9 @@ class _Document:
             )
         key = (local, preserve_space)
         if key not in self._containers:
-            pfx = (self.prefix if self.prefix is not None
-                   else _prefix_of(self.path, local, self.encoding))
             self._containers[key] = _read_container(
-                self.spark, self.path, f"{pfx}{local}", self.encoding,
-                preserve_space,
+                self.spark, self.path, f"{self.prefix_of(local)}{local}",
+                self.encoding, preserve_space,
             )
         return self._containers[key]
 
@@ -290,7 +293,7 @@ def _collapse_model_errors(out: DataFrame, compiled) -> DataFrame:
     # container element of the violation: strip the leaf step from
     # 'container/child' paths; bare table-name paths (identity-machinery
     # occurs rows) resolve through the compile-time parent_of map
-    parent_map = compiled.parent_of or {}
+    parent_map = compiled.parent_of
     if parent_map:
         mapping = F.create_map(
             *[F.lit(x) for kv in parent_map.items() for x in kv]
@@ -475,18 +478,6 @@ class _TableReader:
                 )
 
 
-def _declared_encoding(path: str) -> Optional[str]:
-    with open(path, "rb") as f:
-        return declared_encoding(f.read(1024))
-
-
-def _sniff_encoding(path: str) -> str:
-    """Declared encoding from the XML prolog ('utf-8' when absent or
-    unknown) — the cp1252 menù document reads mojibake under Spark's UTF-8
-    default."""
-    return text_codec(_declared_encoding(path))
-
-
 def _read_container(
     spark: SparkSession, path: str, row_tag: str, encoding: str,
     preserve_space: bool = False,
@@ -513,10 +504,12 @@ _XSI_URI = "http://www.w3.org/2001/XMLSchema-instance"
 
 
 def _field_by_local(dtype: T.StructType, step: str):
+    """The child-element field of ``dtype`` named ``step`` by local name
+    (qualified ``vh:car`` under elementFormDefault="qualified" and bare
+    ``object`` alike), or None.  Attribute, text and namespace fields
+    (leading '_') never match."""
     for sf in dtype.fields:
-        if sf.name.startswith("_"):
-            continue
-        if _local_of(sf.name)[0] == step:
+        if not sf.name.startswith("_") and _local_of(sf.name)[0] == step:
             return sf
     return None
 
@@ -537,6 +530,181 @@ def _xsi_local(col):
     return F.element_at(F.split(col.cast("string"), ":"), -1)
 
 
+def _element_rows(container: DataFrame, sf) -> DataFrame:
+    """One ``_row`` per occurrence of the container's child field ``sf``."""
+    col = F.col(f"`{sf.name}`")
+    if isinstance(sf.dataType, T.ArrayType):
+        col = F.explode(col)
+    return container.select(col.alias("_row"))
+
+
+def _union_all(dfs: list) -> DataFrame:
+    return reduce(DataFrame.unionByName, dfs)
+
+
+def _null():
+    return F.lit(None).cast("string")
+
+
+def _apply_view(compiled, view: TableView, rows: DataFrame, name, parent,
+                src: _Document, scope, order) -> tuple:
+    """``(flat, parts)``: ``rows`` (one ``_row`` struct per element) read
+    through ``view``.  ``flat`` holds the view's columns plus ``scope`` and
+    ``order`` as the spec's scope and order columns; ``parts`` are the
+    structural violations the walk flags.  Every table of a document and
+    every overlay of one (xsi:type, alternative arm, substitution member)
+    reads through here."""
+    rdr = _TableReader(
+        name, view.spec, view.column_paths, view.skipped, parent, src.label,
+        wildcards=view.wildcards, mixed=view.mixed,
+        target_ns=compiled.target_namespace, nsmap=src.nsmap,
+        globals_=compiled.global_elements,
+    )
+    rtype = rows.schema["_row"].dataType
+    if isinstance(rtype, T.StructType):
+        rdr.walk(rtype, "_row.", ())
+    else:
+        # structureless rows (empty elements / bare text): nothing to walk;
+        # the element's own text maps to a ()-path column when one exists
+        own = next(
+            (col for col, p in view.column_paths.items() if tuple(p) == ()),
+            None,
+        )
+        if own is not None:
+            rdr.extract[own] = F.col("_row").cast("string")
+    parts = [
+        rows.filter(cond).select(F.lit(src.label).alias("conv_id"), *sel)
+        for cond, sel in rdr.struct_viols
+    ]
+    spec = view.spec
+    flat = rows.select(
+        *[(rdr.extract[c.name] if c.name in rdr.extract else _null())
+          .alias(c.name) for c in spec.columns],
+        scope.alias(spec.scope_col),
+        order.alias(spec.order_col),
+    )
+    return flat, parts
+
+
+def _xsi_typed(compiled, name, parent, src: _Document, rows: DataFrame,
+               scope, order) -> tuple:
+    """xsi:type overlays (elements.py:657-682): rows carrying a derived
+    type's xsi:type validate against that type's view; an xsi:type naming
+    no compiled type is flagged.  ``(rows, parts)``: the rows left for the
+    declared view (no xsi:type, or an unknown one) and the overlays'
+    violation parts."""
+    overlays = compiled.xsi_overlays.get(name, {})
+    if not overlays:
+        return rows, []
+    rtype = rows.schema["_row"].dataType
+    xf = (_xsi_type_field(rtype, src.nsmap)
+          if isinstance(rtype, T.StructType) else None)
+    if xf is None:
+        return rows, []
+    xcol = F.col(f"_row.`{xf}`")
+    xsi = _xsi_local(xcol)
+    declared = compiled.declared_types.get(name)
+    known = set(overlays) | ({declared} if declared else set())
+    parts: list = []
+    for tname, view in overlays.items():
+        flat, vparts = _apply_view(compiled, view, rows.filter(xsi == tname),
+                                   name, parent, src, scope, order)
+        parts += vparts
+        parts.append(_table_violations(compiled, flat, view.spec))
+    parts.append(
+        rows.filter(xcol.isNotNull() & ~xsi.isin(list(known))).select(
+            F.lit(src.label).alias("conv_id"),
+            *_viol(name, parent, "structure:unknown-xsi-type", xcol,
+                   f"xsi:type on '{name}' does not resolve to a compiled "
+                   "type (elements.py:657-682)"),
+        )
+    )
+    return rows.filter(xcol.isNull() | ~xsi.isin(list(overlays))), parts
+
+
+def _alternatives(compiled, name, parent, src: _Document, rows: DataFrame,
+                  scope, order) -> tuple:
+    """XSD 1.1 conditional type alternatives (elements.py:1345-1365,
+    XsdAlternative:1450-1476): rows whose @attr='v' test matches validate
+    against that arm's view, first matching arm wins.  ``(rows, parts)``:
+    the rows no arm matched (they keep the declared type) and the arms'
+    violation parts."""
+    alts = compiled.alt_overlays.get(name, ())
+    parts: list = []
+    if not alts:
+        return rows, parts
+    rtype = rows.schema["_row"].dataType
+    if not isinstance(rtype, T.StructType):
+        return rows, parts
+    for attr, value, view in alts:
+        if attr is not None:
+            fname = f"_{attr}"
+            if fname not in rtype.fieldNames():
+                continue  # attribute nowhere in the document: no match
+            tcol = F.col(f"_row.`{fname}`").cast("string")
+            cond = tcol.isNotNull() & (tcol == value)
+        else:
+            cond = F.lit(True)  # unconditional (default) arm
+        flat, vparts = _apply_view(compiled, view, rows.filter(cond), name,
+                                   parent, src, scope, order)
+        parts += vparts
+        parts.append(_table_violations(compiled, flat, view.spec))
+        rows = rows.filter(~cond)
+    return rows, parts
+
+
+def _aligned(flat: DataFrame, spec) -> DataFrame:
+    """``flat`` carrying exactly ``spec``'s columns (NULL where it has
+    none) and its scope and order columns."""
+    have = set(flat.columns)
+    return flat.select(
+        *[(F.col(c.name) if c.name in have else _null()).alias(c.name)
+          for c in spec.columns],
+        F.col(spec.scope_col), F.col(spec.order_col),
+    )
+
+
+def _members(compiled, name, parent, src: _Document, container: DataFrame,
+             scope, order) -> tuple:
+    """Substitution members standing in for head ``name`` (elements.py:
+    611-621): each member's rows read through its own view.  ``(flats,
+    parts)``: the member tables aligned to the head's columns, to merge
+    into the head's table for occurrence/identity checks, and the
+    member-only violation parts."""
+    spec = compiled.specs[name]
+    head_cols = {c.name for c in spec.columns}
+    head_ids = {i.name for i in spec.identities}
+    flats: list = []
+    parts: list = []
+    for mname, view in compiled.subst_overlays.get(name, {}).items():
+        sf = _field_by_local(container.schema, mname)
+        if sf is None:
+            continue
+        mrows = _element_rows(container, sf)
+        if not isinstance(mrows.schema["_row"].dataType, T.StructType):
+            continue
+        flat, vparts = _apply_view(compiled, view, mrows, mname, parent, src,
+                                   scope, order)
+        parts += vparts
+        # member-ONLY constraints validate here; base-type facets and
+        # shared identities run on the merged head table (no double
+        # counting)
+        extra = replace(
+            view.spec,
+            columns=tuple(
+                c for c in view.spec.columns if c.name not in head_cols
+            ),
+            identities=tuple(
+                i for i in view.spec.identities if i.name not in head_ids
+            ),
+        )
+        if extra.columns or extra.identities or extra.row_assertions:
+            parts.append(_table_violations(compiled, flat, extra,
+                                           key=(name, mname)))
+        flats.append(_aligned(flat, spec))
+    return flats, parts
+
+
 def _flatten_nested(compiled, name, src: _Document):
     """One NESTED table's (flat DataFrame | None, [violation parts]):
     repeated elements below a row element, exploded level by level with
@@ -547,7 +715,6 @@ def _flatten_nested(compiled, name, src: _Document):
     spec = compiled.specs[name]
     nested = compiled.nested_tables
     nsmap = src.nsmap
-    doc = src.label
 
     # parent chain from the TOP row element down to this table
     chain = [name]
@@ -557,32 +724,25 @@ def _flatten_nested(compiled, name, src: _Document):
 
     parent = compiled.parent_of.get(name, top)
     container = src.container(parent)
-    fields = {f.name: f for f in container.schema.fields}
 
     # level 0: the top row element's rows with their ordinal
-    if top in getattr(compiled, "doc_rows", frozenset()):
-        keep = [fn for fn in fields if not fn.startswith("_")]
+    if top in compiled.doc_rows:
+        keep = [fn for fn in container.columns if not fn.startswith("_")]
         rows = container.select(
             F.lit(0).alias("_p0"),
             F.struct(*[F.col(f"`{fn}`") for fn in keep]).alias("_row"),
         )
     else:
-        row_field = next(
-            (fn for fn in fields
-             if fn != "_VALUE" and not fn.startswith("_xmlns")
-             and not fn.startswith("_xsi:")
-             and _local_of(fn)[0] == top), None,
-        )
-        if row_field is None:
+        sf = _field_by_local(container.schema, top)
+        if sf is None:
             return None, []  # no parent rows: nothing to validate here
-        dtype = fields[row_field].dataType
-        if isinstance(dtype, T.ArrayType):
+        if isinstance(sf.dataType, T.ArrayType):
             rows = container.select(
-                F.posexplode(F.col(f"`{row_field}`")).alias("_p0", "_row")
+                F.posexplode(F.col(f"`{sf.name}`")).alias("_p0", "_row")
             )
         else:
             rows = container.select(
-                F.lit(0).alias("_p0"), F.col(f"`{row_field}`").alias("_row")
+                F.lit(0).alias("_p0"), F.col(f"`{sf.name}`").alias("_row")
             )
 
     pos_cols = ["_p0"]
@@ -630,11 +790,11 @@ def _flatten_nested(compiled, name, src: _Document):
 
     # composite scope: doc + every ancestor ordinal (NOT this level's)
     scope_val = F.concat_ws(
-        "#", F.lit(doc), *[F.col(c).cast("string") for c in pos_cols[:-1]]
+        "#", F.lit(src.label),
+        *[F.col(c).cast("string") for c in pos_cols[:-1]]
     )
     order_val = F.col(pos_cols[-1]).cast("long")
 
-    parts: list = []
     rtype = rows.schema["_row"].dataType
     if not isinstance(rtype, T.StructType):
         # nested SIMPLE value table: the row IS the element text
@@ -643,7 +803,7 @@ def _flatten_nested(compiled, name, src: _Document):
             scope_val.alias(spec.scope_col),
             order_val.alias(spec.order_col),
         )
-        return flat, parts
+        return flat, []
 
     paths = compiled.column_paths.get(name, {})
     if set(paths) == {"value"} and tuple(paths.get("value", ())) == ():
@@ -657,100 +817,34 @@ def _flatten_nested(compiled, name, src: _Document):
             scope_val.alias(spec.scope_col),
             order_val.alias(spec.order_col),
         )
-        return flat, parts
+        return flat, []
 
-    # xsi:type overlays on the nested table's own rows (issue_314:
-    # <item b:type="Concrete..."/> below a document row) — same pattern
-    # as _flatten_one's row-element overlays, with the composite
-    # scope/order of this nesting level
-    overlays_n = getattr(compiled, "xsi_overlays", {}).get(name, {})
-    if overlays_n:
-        xf = _xsi_type_field(rtype, nsmap)
-        if xf is not None:
-            xcol = F.col(f"_row.`{xf}`")
-            xsi = _xsi_local(xcol)
-            declared = getattr(compiled, "declared_types", {}).get(name)
-            known = set(overlays_n) | ({declared} if declared else set())
-            for tname, ov in overlays_n.items():
-                odf = rows.filter(xsi == tname)
-                ordr = _TableReader(
-                    name, ov["spec"], ov["column_paths"], ov["skipped"],
-                    parent, doc,
-                    wildcards=ov["wildcards"], mixed=ov["mixed"],
-                    target_ns=getattr(compiled, "target_namespace", ""),
-                    nsmap=nsmap,
-                    globals_=getattr(compiled, "global_elements",
-                                     frozenset()),
-                )
-                ordr.walk(rtype, "_row.", ())
-                for cond, sel in ordr.struct_viols:
-                    parts.append(
-                        odf.filter(cond).select(
-                            F.lit(doc).alias("conv_id"), *sel
-                        )
-                    )
-                flat_o = odf.select(*[
-                    (ordr.extract[c.name] if c.name in ordr.extract
-                     else F.lit(None).cast("string")).alias(c.name)
-                    for c in ov["spec"].columns
-                ], scope_val.alias(spec.scope_col),
-                    order_val.alias(spec.order_col))
-                parts.append(_table_violations(compiled, flat_o, ov["spec"]))
-            parts.append(
-                rows.filter(
-                    xcol.isNotNull() & ~xsi.isin(list(known))
-                ).select(
-                    F.lit(doc).alias("conv_id"),
-                    *_viol(name, parent, "structure:unknown-xsi-type",
-                           xcol,
-                           f"xsi:type on '{name}' does not resolve to a "
-                           "compiled type (elements.py:657-682)"),
-                )
-            )
-            rows = rows.filter(
-                xcol.isNull() | ~xsi.isin(list(overlays_n))
-            )
-
-    rdr = _TableReader(
-        name, spec, paths,
-        compiled.skipped_paths.get(name, ()),
-        parent, doc,
-        wildcards=getattr(compiled, "wildcards", {}).get(name, ()),
-        mixed=getattr(compiled, "mixed_paths", {}).get(name, frozenset()),
-        target_ns=getattr(compiled, "target_namespace", ""),
-        nsmap=nsmap,
-        globals_=getattr(compiled, "global_elements", frozenset()),
-    )
-    rdr.walk(rtype, "_row.", ())
-    for cond, sel in rdr.struct_viols:
-        parts.append(
-            rows.filter(cond).select(F.lit(doc).alias("conv_id"), *sel)
-        )
-    flat = rows.select(
-        *[
-            (rdr.extract[c.name] if c.name in rdr.extract
-             else F.lit(None).cast("string")).alias(c.name)
-            for c in spec.columns
-        ],
-        scope_val.alias(spec.scope_col),
-        order_val.alias(spec.order_col),
-    )
-    return flat, parts
+    # xsi:type on the nested table's own rows (issue_314: <item
+    # b:type="Concrete..."/> below a document row), in this level's
+    # composite scope/order
+    rows, parts = _xsi_typed(compiled, name, parent, src, rows,
+                             scope_val, order_val)
+    flat, vparts = _apply_view(compiled, compiled.view(name), rows, name,
+                               parent, src, scope_val, order_val)
+    return flat, parts + vparts
 
 
 def _flatten_one(compiled, name, src: _Document):
     """One table's (flat DataFrame | None, [structural violation parts])."""
-    if name in getattr(compiled, "nested_tables", {}):
+    if name in compiled.nested_tables:
         return _flatten_nested(compiled, name, src)
     spec = compiled.specs[name]
     doc = src.label
     parent = compiled.parent_of.get(name, name)
     container = src.container(
-        parent,
-        preserve_space=name in getattr(compiled, "preserve_space",
-                                       frozenset()),
+        parent, preserve_space=name in compiled.preserve_space
     )
-    fields = {f.name: f for f in container.schema.fields}
+    fields = container.columns
+    # top-level rows: the document label scopes them; the order is a
+    # stable row id (partition-prefixed, NOT 0..n-1): enough for the
+    # Occurs counts compile_xsd emits; schemas with ordered model checks
+    # should land in parquet with a real order key
+    scope, order = F.lit(doc), F.monotonically_increasing_id()
     parts: list = []
     member_flats: list = []  # substitution members standing in for `name`
 
@@ -762,9 +856,8 @@ def _flatten_one(compiled, name, src: _Document):
 
     # container-level stray character data (legitimate when the container's
     # type is mixed="true" — complex_types.py:35)
-    if "_VALUE" in fields and not has_own_text and parent not in getattr(
-        compiled, "mixed_containers", frozenset()
-    ):
+    if "_VALUE" in fields and not has_own_text \
+            and parent not in compiled.mixed_containers:
         txt = F.trim(F.col("`_VALUE`").cast("string"))
         parts.append(
             container.filter(txt.isNotNull() & (txt != "")).select(
@@ -775,7 +868,7 @@ def _flatten_one(compiled, name, src: _Document):
             )
         )
 
-    if name in getattr(compiled, "doc_rows", frozenset()):
+    if name in compiled.doc_rows:
         # document-singleton table: the container element IS the row; its
         # repeated children live in their own tables (suppressed via the
         # compiler's skipped paths); _VALUE was checked container-level
@@ -788,113 +881,13 @@ def _flatten_one(compiled, name, src: _Document):
             F.struct(*[F.col(f"`{fn}`") for fn in keep]).alias("_row")
         )
     else:
-        # substitution members standing in for the head (elements.py:
-        # 611-621): validated against the member's own type, merged into
-        # the head's table for occurrence/identity checks
-        members = getattr(compiled, "subst_overlays", {}).get(name, {})
-        if members:
-            nsmap_m = src.nsmap
-            for mname, mo in members.items():
-                mfield = next(
-                    (fn for fn in fields
-                     if fn != "_VALUE" and not fn.startswith("_xmlns")
-                     and not fn.startswith("_xsi:")
-                     and _local_of(fn)[0] == mname), None,
-                )
-                if mfield is None:
-                    continue
-                mdtype = fields[mfield].dataType
-                melem = (
-                    F.explode(F.col(f"`{mfield}`"))
-                    if isinstance(mdtype, T.ArrayType)
-                    else F.col(f"`{mfield}`")
-                )
-                mrows = container.select(melem.alias("_row"))
-                mrtype = mrows.schema["_row"].dataType
-                if not isinstance(mrtype, T.StructType):
-                    continue
-                mrdr = _TableReader(
-                    mname, mo["spec"], mo["column_paths"], mo["skipped"],
-                    parent, doc,
-                    wildcards=mo["wildcards"], mixed=mo["mixed"],
-                    target_ns=getattr(compiled, "target_namespace", ""),
-                    nsmap=nsmap_m,
-                    globals_=getattr(compiled, "global_elements",
-                                     frozenset()),
-                )
-                mrdr.walk(mrtype, "_row.", ())
-                for cond, sel in mrdr.struct_viols:
-                    parts.append(
-                        mrows.filter(cond).select(
-                            F.lit(doc).alias("conv_id"), *sel
-                        )
-                    )
-                flat_m = (
-                    mrows.select(*[
-                        (mrdr.extract[c.name] if c.name in mrdr.extract
-                         else F.lit(None).cast("string")).alias(c.name)
-                        for c in mo["spec"].columns
-                    ])
-                    .withColumn(spec.scope_col, F.lit(doc))
-                    .withColumn(spec.order_col,
-                                F.monotonically_increasing_id())
-                )
-                # member-ONLY constraints validate here; base-type facets
-                # and shared identities run on the merged head table (no
-                # double counting)
-                from sissaschool_xmlschema_spark import spec as S
-
-                head_cols = {c.name for c in spec.columns}
-                head_ids = {i.name for i in spec.identities}
-                spec_extra = S.TableSpec(
-                    name=mo["spec"].name,
-                    scope_col=spec.scope_col,
-                    order_col=spec.order_col,
-                    columns=tuple(
-                        c for c in mo["spec"].columns
-                        if c.name not in head_cols
-                    ),
-                    identities=tuple(
-                        i for i in mo["spec"].identities
-                        if i.name not in head_ids
-                    ),
-                    row_assertions=mo["spec"].row_assertions,
-                )
-                if (spec_extra.columns or spec_extra.identities
-                        or spec_extra.row_assertions):
-                    parts.append(_table_violations(
-                        compiled, flat_m, spec_extra, key=(name, mname)))
-                member_flats.append(flat_m)
-
-        # locals may be qualified (elementFormDefault="qualified", vh:car)
-        # or not (collection's bare <object>): match by local name
-        row_field = next(
-            (fn for fn in fields
-             if fn != "_VALUE" and not fn.startswith("_xmlns")
-             and not fn.startswith("_xsi:") and _local_of(fn)[0] == name),
-            None,
-        )
+        member_flats, mparts = _members(compiled, name, parent, src,
+                                        container, scope, order)
+        parts += mparts
+        row_field = _field_by_local(container.schema, name)
         if row_field is None and member_flats:
             # the head never appears itself; the table is its members
-            flat = member_flats[0].select(
-                *[
-                    (F.col(c.name)
-                     if c.name in member_flats[0].columns
-                     else F.lit(None).cast("string")).alias(c.name)
-                    for c in spec.columns
-                ],
-                F.col(spec.scope_col), F.col(spec.order_col),
-            )
-            for fm in member_flats[1:]:
-                flat = flat.unionByName(fm.select(
-                    *[
-                        (F.col(c.name) if c.name in fm.columns
-                         else F.lit(None).cast("string")).alias(c.name)
-                        for c in spec.columns
-                    ],
-                    F.col(spec.scope_col), F.col(spec.order_col),
-                ))
-            return flat, parts
+            return _union_all(member_flats), parts
         if row_field is None:
             # no row elements anywhere in the document: a minOccurs>0 bound
             # is still violated once per container occurrence
@@ -914,15 +907,9 @@ def _flatten_one(compiled, name, src: _Document):
                         )
                     )
             return None, parts
+        rows = _element_rows(container, row_field)
 
-        dtype = fields[row_field].dataType
-        elem = (
-            F.explode(F.col(f"`{row_field}`"))
-            if isinstance(dtype, T.ArrayType) else F.col(f"`{row_field}`")
-        )
-        rows = container.select(elem.alias("_row"))
-
-    if name in getattr(compiled, "simple_rows", frozenset()):
+    if name in compiled.simple_rows:
         # repeated SIMPLE child (menù shape): the row IS the element text;
         # an element carrying attributes infers as a struct whose text is
         # _VALUE and whose attributes are undeclared by construction
@@ -950,172 +937,22 @@ def _flatten_one(compiled, name, src: _Document):
                 F.col("_row.`_VALUE`")
                 if "_VALUE" in rtype.fieldNames() else F.lit(None)
             )
-        spec = compiled.specs[name]
-        flat = (
-            rows.select(val.cast("string").alias("value"))
-            .withColumn(spec.scope_col, F.lit(doc))
-            .withColumn(spec.order_col, F.monotonically_increasing_id())
+        flat = rows.select(
+            val.cast("string").alias("value"),
+            scope.alias(spec.scope_col),
+            order.alias(spec.order_col),
         )
         return flat, parts
 
-    # xsi:type overlays (elements.py:657-682): rows carrying a derived
-    # type's xsi:type validate against THAT type's overlay column-set;
-    # unknown xsi:type values are flagged and fall back to the base
-    overlays = getattr(compiled, "xsi_overlays", {}).get(name, {})
-    rtype0 = rows.schema["_row"].dataType
-    nsmap0 = src.nsmap
-    if overlays and isinstance(rtype0, T.StructType):
-        xf = _xsi_type_field(rtype0, nsmap0)
-        if xf is not None:
-            xcol = F.col(f"_row.`{xf}`")
-            xsi = _xsi_local(xcol)
-            declared = getattr(compiled, "declared_types", {}).get(name)
-            known = set(overlays) | ({declared} if declared else set())
-            for tname, ov in overlays.items():
-                odf = rows.filter(xsi == tname)
-                ordr = _TableReader(
-                    name, ov["spec"], ov["column_paths"], ov["skipped"],
-                    parent, doc,
-                    wildcards=ov["wildcards"], mixed=ov["mixed"],
-                    target_ns=getattr(compiled, "target_namespace", ""),
-                    nsmap=nsmap0,
-                    globals_=getattr(compiled, "global_elements",
-                                     frozenset()),
-                )
-                ordr.walk(rtype0, "_row.", ())
-                for cond, sel in ordr.struct_viols:
-                    parts.append(
-                        odf.filter(cond).select(
-                            F.lit(doc).alias("conv_id"), *sel
-                        )
-                    )
-                flat_o = (
-                    odf.select(*[
-                        (ordr.extract[c.name] if c.name in ordr.extract
-                         else F.lit(None).cast("string")).alias(c.name)
-                        for c in ov["spec"].columns
-                    ])
-                    .withColumn(spec.scope_col, F.lit(doc))
-                    .withColumn(spec.order_col,
-                                F.monotonically_increasing_id())
-                )
-                parts.append(_table_violations(compiled, flat_o, ov["spec"]))
-            parts.append(
-                rows.filter(
-                    xcol.isNotNull() & ~xsi.isin(list(known))
-                ).select(
-                    F.lit(doc).alias("conv_id"),
-                    *_viol(name, parent, "structure:unknown-xsi-type",
-                           xcol,
-                           f"xsi:type on '{name}' does not resolve to a "
-                           "compiled type (elements.py:657-682)"),
-                )
-            )
-            rows = rows.filter(
-                xcol.isNull() | ~xsi.isin(list(overlays))
-            )
-
-    # XSD 1.1 conditional type alternatives (elements.py:1345-1365,
-    # XsdAlternative:1450-1476): rows whose @attr='v' test matches validate
-    # against that arm's type overlay — first matching arm wins; rows
-    # matching no arm keep the declared type below
-    alts = getattr(compiled, "alt_overlays", {}).get(name, ())
-    rtype_alt = rows.schema["_row"].dataType
-    if alts and isinstance(rtype_alt, T.StructType):
-        remaining = rows
-        for arm in alts:
-            if arm["attr"] is not None:
-                fname = f"_{arm['attr']}"
-                if fname not in rtype_alt.fieldNames():
-                    continue  # attribute nowhere in the document: no match
-                tcol = F.col(f"_row.`{fname}`").cast("string")
-                cond = tcol.isNotNull() & (tcol == arm["value"])
-            else:
-                cond = F.lit(True)  # unconditional (default) arm
-            adf = remaining.filter(cond)
-            remaining = remaining.filter(~cond)
-            ardr = _TableReader(
-                name, arm["spec"], arm["column_paths"], arm["skipped"],
-                parent, doc,
-                wildcards=arm["wildcards"], mixed=arm["mixed"],
-                target_ns=getattr(compiled, "target_namespace", ""),
-                nsmap=nsmap0,
-                globals_=getattr(compiled, "global_elements",
-                                 frozenset()),
-            )
-            ardr.walk(rtype_alt, "_row.", ())
-            for vcond, sel in ardr.struct_viols:
-                parts.append(
-                    adf.filter(vcond).select(
-                        F.lit(doc).alias("conv_id"), *sel
-                    )
-                )
-            flat_a = (
-                adf.select(*[
-                    (ardr.extract[c.name] if c.name in ardr.extract
-                     else F.lit(None).cast("string")).alias(c.name)
-                    for c in arm["spec"].columns
-                ])
-                .withColumn(spec.scope_col, F.lit(doc))
-                .withColumn(spec.order_col,
-                            F.monotonically_increasing_id())
-            )
-            parts.append(_table_violations(compiled, flat_a, arm["spec"]))
-        rows = remaining
-
-    rdr = _TableReader(
-        name, spec,
-        compiled.column_paths.get(name, {}),
-        compiled.skipped_paths.get(name, ()),
-        parent, doc,
-        wildcards=getattr(compiled, "wildcards", {}).get(name, ()),
-        mixed=getattr(compiled, "mixed_paths", {}).get(name, frozenset()),
-        target_ns=getattr(compiled, "target_namespace", ""),
-        nsmap=nsmap0,
-        globals_=getattr(compiled, "global_elements", frozenset()),
-    )
-    rtype_row = rows.schema["_row"].dataType
-    if isinstance(rtype_row, T.StructType):
-        rdr.walk(rtype_row, "_row.", ())
-    else:
-        # structureless rows (empty elements / bare text): nothing to walk;
-        # the element's own text maps to a ()-path column when one exists
-        own = next(
-            (col for col, p in compiled.column_paths.get(name, {}).items()
-             if tuple(p) == ()), None,
-        )
-        if own is not None:
-            rdr.extract[own] = F.col("_row").cast("string")
-
-    for cond, sel in rdr.struct_viols:
-        parts.append(
-            rows.filter(cond).select(F.lit(doc).alias("conv_id"), *sel)
-        )
-
-    flat = rows.select(*[
-        (rdr.extract[c.name] if c.name in rdr.extract
-         else F.lit(None).cast("string")).alias(c.name)
-        for c in spec.columns
-    ])
-    flat = (
-        flat.withColumn(spec.scope_col, F.lit(doc))
-        # stable row id (partition-prefixed, NOT 0..n-1): enough for the
-        # Occurs counts compile_xsd emits; schemas with ordered model
-        # checks should land in parquet with a real order key
-        .withColumn(spec.order_col, F.monotonically_increasing_id())
-    )
+    rows, xparts = _xsi_typed(compiled, name, parent, src, rows, scope,
+                              order)
+    rows, aparts = _alternatives(compiled, name, parent, src, rows, scope,
+                                 order)
+    flat, vparts = _apply_view(compiled, compiled.view(name), rows, name,
+                               parent, src, scope, order)
     # substitution members merge into the head table (shared columns) so
     # occurrence bounds and identities see head + member rows together
-    for fm in member_flats:
-        flat = flat.unionByName(fm.select(
-            *[
-                (F.col(c.name) if c.name in fm.columns
-                 else F.lit(None).cast("string")).alias(c.name)
-                for c in spec.columns
-            ],
-            F.col(spec.scope_col), F.col(spec.order_col),
-        ))
-    return flat, parts
+    return _union_all([flat] + member_flats), parts + xparts + aparts + vparts
 
 
 def xml_instance_tables(
@@ -1136,7 +973,7 @@ def xml_instance_tables(
         xsd_source if isinstance(xsd_source, CompiledXsd)
         else compile_xsd(xsd_source, base_dir=base_dir)
     )
-    src = _Document(spark, xml_path, prefix)
+    src = _Document(xml_path, prefix, spark)
     out: dict = {}
     for name in sorted(compiled.specs):
         flat, _parts = _flatten_one(compiled, name, src)
@@ -1196,7 +1033,7 @@ def validate_xml_instance(
         xsd_source if isinstance(xsd_source, CompiledXsd)
         else compile_xsd(xsd_source, base_dir=base_dir, version=version)
     )
-    src = _Document(spark, xml_path, prefix)
+    src = _Document(xml_path, prefix, spark)
     if src.unknown_encoding:
         return _document_violation(
             spark, src, _root_local_of(src.head), "structure:unknown-encoding",
@@ -1233,7 +1070,7 @@ def validate_xml_instance(
     for ext in compiled.external_keyrefs:
         if ext.table in flats and ext.key_table in flats:
             keys_df = flats[ext.key_table]
-            if getattr(ext, "last_wins", False):
+            if ext.last_wins:
                 # key declared ON a single element: upward propagation is
                 # last-sibling-override (collection3bis) — only the final
                 # occurrence per document scope is a visible key
@@ -1260,9 +1097,7 @@ def validate_xml_instance(
         # zero violations in the canonical schema (mirrors decode's
         # empty-fields branch)
         return spark.createDataFrame([], VIOLATION_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = _union_all(parts)
     # the union's branches are one partition each; one task reads them all
     # and the collapse window runs over that partition without an exchange
     return _collapse_model_errors(out.coalesce(1), compiled)

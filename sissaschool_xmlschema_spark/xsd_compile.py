@@ -53,12 +53,11 @@ chain.
 from __future__ import annotations
 
 import codecs
-import io
 import os
 import re
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
-from typing import Optional, Sequence, Union
+from typing import NamedTuple, Optional, Sequence, Union
 
 from sissaschool_xmlschema_spark import spec as S
 from sissaschool_xmlschema_spark.functions.lexical import (
@@ -124,6 +123,32 @@ class ExternalKeyref:
     last_wins: bool = False
 
 
+@dataclass(frozen=True)
+class TableView:
+    """How rows of one table, or of one overlay of it, read from an
+    instance: the spec they validate against, each column's element-tree
+    path ('@' marks the attribute step), the schema-declared subtrees
+    outside the flat subset, the wildcard markers and the mixed-content
+    paths.  The instance reader applies every view the same way
+    (sources/xml_instance.py)."""
+
+    spec: S.TableSpec
+    column_paths: dict
+    skipped: frozenset = frozenset()
+    wildcards: tuple = ()
+    mixed: frozenset = frozenset()
+
+
+class Alternative(NamedTuple):
+    """One XSD 1.1 ``xs:alternative`` arm: rows whose ``@attr`` equals
+    ``value`` read through ``view`` (``attr`` None = the unconditional
+    default arm)."""
+
+    attr: Optional[str]
+    value: Optional[str]
+    view: TableView
+
+
 @dataclass
 class CompiledXsd:
     """Result of :func:`compile_xsd`: one TableSpec per row element, plus
@@ -168,24 +193,22 @@ class CompiledXsd:
     preserve_space: frozenset = frozenset()
     # table -> NestedTable for repeated elements below a row element
     nested_tables: dict = field(default_factory=dict)
-    # row element -> {xsi:type local name -> overlay view dict
-    # (spec, column_paths, skipped, wildcards, mixed)}: dynamic type
+    # row element -> {xsi:type local name -> TableView}: dynamic type
     # substitution on instances (reference elements.py:657-682)
     xsi_overlays: dict = field(default_factory=dict)
     # row element -> its declared type's local name (xsi:type naming the
     # declared type is a no-op, anything else unknown is a violation)
     declared_types: dict = field(default_factory=dict)
-    # head row element -> {substitution member name -> overlay view dict}:
-    # a member element standing in for its head in the document
+    # head row element -> {substitution member name -> TableView}: a
+    # member element standing in for its head in the document
     # (reference elements.py:611-621); member rows are validated against
     # the member's own type and merged into the head's table for
     # occurrence/identity checks
     subst_overlays: dict = field(default_factory=dict)
-    # row element -> ordered tuple of conditional-type arms (XSD 1.1
-    # xs:alternative, reference elements.py:1450-1476): dicts with 'attr'/
-    # 'value' (the @attr='v' test subset; attr None = the unconditional
-    # default arm) + the overlay view dict.  First matching arm wins;
-    # non-matching rows fall back to the declared type.
+    # row element -> ordered tuple of Alternative arms (XSD 1.1
+    # xs:alternative, reference elements.py:1450-1476; the @attr='v' test
+    # subset).  First matching arm wins; non-matching rows fall back to
+    # the declared type.
     alt_overlays: dict = field(default_factory=dict)
     # cache key -> (spec, CompiledPlan), filled by plan()
     _plans: dict = field(
@@ -206,6 +229,16 @@ class CompiledXsd:
         if hit is None:
             hit = self._plans[key] = (spec, compile_plan(spec))
         return hit[1]
+
+    def view(self, name: str) -> TableView:
+        """The declared view of table ``name``."""
+        return TableView(
+            spec=self.specs[name],
+            column_paths=self.column_paths.get(name, {}),
+            skipped=self.skipped_paths.get(name, frozenset()),
+            wildcards=self.wildcards.get(name, ()),
+            mixed=self.mixed_paths.get(name, frozenset()),
+        )
 
     def spec(self, name: Optional[str] = None) -> S.TableSpec:
         if name is None:
@@ -1085,7 +1118,9 @@ def read_xml_text(path) -> str:
 
 def _parse_schema_text(text: str, what: str) -> ET.Element:
     try:
-        root = ET.parse(io.StringIO(text)).getroot()
+        # fed as text: the parser does not re-apply the declared encoding
+        # to characters read_xml_text already decoded
+        root = ET.fromstring(text)
     except ET.ParseError as err:
         # a malformed schema DOCUMENT is a compile error with a clear
         # source, not a raw parser traceback (resources/malformed.xsd)
@@ -1477,6 +1512,36 @@ def compile_xsd(
         for b in _base_chain(tname):
             derived_of.setdefault(b, []).append(tname)
 
+    def overlay_view(ct: ET.Element, key: str, spec_name: str) -> tuple:
+        """``(view, queued)``: complexType ``ct`` flattened under ``key``
+        as an overlay view whose violation paths read ``<spec_name>/<col>``,
+        and the nested-table entries the flatten queued (taken off
+        ``ctx.pending_nested``: each overlay kind decides their fate)."""
+        n_pend = len(ctx.pending_nested)
+        cols: list = []
+        uniq: list = []
+        _flatten_type(ct, ctx, "", cols, uniq, scope_col, in_choice=False,
+                      table=key)
+        queued = ctx.pending_nested[n_pend:]
+        del ctx.pending_nested[n_pend:]
+        view = TableView(
+            spec=S.TableSpec(
+                name=spec_name,
+                scope_col=scope_col,
+                order_col=order_col,
+                columns=tuple(
+                    S.ColumnSpec(c.name, tuple(c.facets)) for c in cols
+                ),
+                identities=tuple(uniq),
+                row_assertions=tuple(ctx.assertions.get(key, ())),
+            ),
+            column_paths={c.name: c.path for c in cols},
+            skipped=frozenset(ctx.skipped.get(key, ())),
+            wildcards=tuple(ctx.wildcards.get(key, ())),
+            mixed=frozenset(ctx.mixed.get(key, ())),
+        )
+        return view, queued
+
     xsi_overlays: dict = {}
     declared_types: dict = {}
     for name, (el, _ctype, _p, _mn, _mx) in detected.items():
@@ -1486,32 +1551,14 @@ def compile_xsd(
             declared_types[name] = d_local
         for T in derived_of.get(d_local, ()):
             key = f"{name}@{T}"
-            ocols: list = []
-            ouniq: list = []
-            n_pend = len(ctx.pending_nested)
-            _flatten_type(ctx.complex_types[T], ctx, "", ocols, ouniq,
-                          scope_col, in_choice=False, table=key)
-            for ent in ctx.pending_nested[n_pend:]:
-                if ent["parent"] == key:
-                    ent["parent"] = name
-                    ent["xsi_type"] = T
-            spec_o = S.TableSpec(
-                name=key,
-                scope_col=scope_col,
-                order_col=order_col,
-                columns=tuple(
-                    S.ColumnSpec(c.name, tuple(c.facets)) for c in ocols
-                ),
-                identities=tuple(ouniq),
-                row_assertions=tuple(ctx.assertions.get(key, ())),
-            )
-            xsi_overlays.setdefault(name, {})[T] = dict(
-                spec=spec_o,
-                column_paths={c.name: c.path for c in ocols},
-                skipped=frozenset(ctx.skipped.get(key, ())),
-                wildcards=tuple(ctx.wildcards.get(key, ())),
-                mixed=frozenset(ctx.mixed.get(key, ())),
-            )
+            view, queued = overlay_view(ctx.complex_types[T], key, key)
+            # nested tables below the overlay hang off the row element,
+            # gated on rows carrying this xsi:type
+            for ent in queued:
+                ent["parent"] = name
+                ent["xsi_type"] = T
+            ctx.pending_nested.extend(queued)
+            xsi_overlays.setdefault(name, {})[T] = view
 
     # --- XSD 1.1 conditional type alternatives -------------------------------
     # <xs:alternative test="@mode='A'" type="T"/> children of an element
@@ -1546,31 +1593,13 @@ def compile_xsd(
                         "is not a named complexType (arm not applied)"
                     )
                     continue
-                key = f"{name}@alt@{tlocal}"
-                acols: list = []
-                auniq: list = []
-                n_pend = len(ctx.pending_nested)
-                _flatten_type(ctx.complex_types[tlocal], ctx, "", acols,
-                              auniq, scope_col, in_choice=False, table=key)
-                del ctx.pending_nested[n_pend:]  # not supported below arms
-                spec_a = S.TableSpec(
-                    name=name,  # violation paths read '<element>/<col>'
-                    scope_col=scope_col,
-                    order_col=order_col,
-                    columns=tuple(
-                        S.ColumnSpec(c.name, tuple(c.facets)) for c in acols
-                    ),
-                    identities=tuple(auniq),
-                    row_assertions=tuple(ctx.assertions.get(key, ())),
+                # nested tables below arms are not supported: dropped
+                view, _queued = overlay_view(
+                    ctx.complex_types[tlocal], f"{name}@alt@{tlocal}", name
                 )
-                alt_overlays.setdefault(name, []).append(dict(
-                    attr=attr, value=value, type=tlocal,
-                    spec=spec_a,
-                    column_paths={c.name: c.path for c in acols},
-                    skipped=frozenset(ctx.skipped.get(key, ())),
-                    wildcards=tuple(ctx.wildcards.get(key, ())),
-                    mixed=frozenset(ctx.mixed.get(key, ())),
-                ))
+                alt_overlays.setdefault(name, []).append(
+                    Alternative(attr, value, view)
+                )
 
     # --- substitution-group members as document structure --------------------
     # a global element with substitutionGroup=H may stand in for H in the
@@ -1590,40 +1619,14 @@ def compile_xsd(
                 "skipped)"
             )
             continue
-        key = f"{head}@@{gname}"
-        mcols: list = []
-        muniq: list = []
-        n_pend = len(ctx.pending_nested)
-        _flatten_type(mpayload, ctx, "", mcols, muniq, scope_col,
-                      in_choice=False, table=key)
-        for ent in ctx.pending_nested[n_pend:]:
-            if ent["parent"] == key:
-                ent["parent"] = None  # not supported below members
-                ctx.restrictions.append(
-                    f"substitution member {gname!r}: nested repeated "
-                    f"child {ent['name']!r} below a member element "
-                    "(skipped)"
-                )
-        ctx.pending_nested[:] = [
-            e for e in ctx.pending_nested if e["parent"] is not None
-        ]
-        spec_m = S.TableSpec(
-            name=gname,  # violation paths read '<member>/<col>'
-            scope_col=scope_col,
-            order_col=order_col,
-            columns=tuple(
-                S.ColumnSpec(c.name, tuple(c.facets)) for c in mcols
-            ),
-            identities=tuple(muniq),
-            row_assertions=tuple(ctx.assertions.get(key, ())),
-        )
-        subst_overlays.setdefault(head, {})[gname] = dict(
-            spec=spec_m,
-            column_paths={c.name: c.path for c in mcols},
-            skipped=frozenset(ctx.skipped.get(key, ())),
-            wildcards=tuple(ctx.wildcards.get(key, ())),
-            mixed=frozenset(ctx.mixed.get(key, ())),
-        )
+        view, queued = overlay_view(mpayload, f"{head}@@{gname}", gname)
+        for ent in queued:  # not supported below members
+            ctx.restrictions.append(
+                f"substitution member {gname!r}: nested repeated "
+                f"child {ent['name']!r} below a member element "
+                "(skipped)"
+            )
+        subst_overlays.setdefault(head, {})[gname] = view
 
     # --- nested repeated tables --------------------------------------------
     # repeated children BELOW a row element become their own tables scoped
@@ -1678,28 +1681,9 @@ def compile_xsd(
             declared_types[nname] = d_local
         for T in derived_of.get(d_local, ()):
             key = f"{nname}@{T}"
-            ocols2: list = []
-            ouniq2: list = []
-            n_pend2 = len(ctx.pending_nested)
-            _flatten_type(ctx.complex_types[T], ctx, "", ocols2, ouniq2,
-                          scope_col, in_choice=False, table=key)
-            del ctx.pending_nested[n_pend2:]  # not supported below overlays
-            xsi_overlays.setdefault(nname, {})[T] = dict(
-                spec=S.TableSpec(
-                    name=key,
-                    scope_col=scope_col,
-                    order_col=order_col,
-                    columns=tuple(
-                        S.ColumnSpec(c.name, tuple(c.facets))
-                        for c in ocols2
-                    ),
-                    identities=tuple(ouniq2),
-                    row_assertions=tuple(ctx.assertions.get(key, ())),
-                ),
-                column_paths={c.name: c.path for c in ocols2},
-                skipped=frozenset(ctx.skipped.get(key, ())),
-                wildcards=tuple(ctx.wildcards.get(key, ())),
-                mixed=frozenset(ctx.mixed.get(key, ())),
+            # nested tables below these overlays are not supported: dropped
+            xsi_overlays.setdefault(nname, {})[T], _queued = overlay_view(
+                ctx.complex_types[T], key, key
             )
 
     # --- identity constraints ---------------------------------------------

@@ -3,7 +3,17 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+# The reference implementation's test corpus (its tests/test_cases
+# directory): a checkout named 'reference' next to this repository unless
+# XMLSCHEMA_TEST_CASES names another location.  Tests over the corpus fail
+# when it is absent; they are never skipped.
+REFERENCE_CASES = os.environ.get(
+    "XMLSCHEMA_TEST_CASES",
+    os.path.join(os.path.dirname(ROOT), "reference", "tests", "test_cases"),
+)
 
 from pyspark.sql import SparkSession  # noqa: E402
 

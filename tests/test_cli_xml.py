@@ -10,7 +10,9 @@ import json
 
 from sissaschool_xmlschema_spark.cli import main
 
-VB = "/root/reference/tests/test_cases/examples/vehicles"
+from conftest import REFERENCE_CASES
+
+VB = f"{REFERENCE_CASES}/examples/vehicles"
 
 
 def test_validate_xml_exit_status_is_error_count(spark, capsys):

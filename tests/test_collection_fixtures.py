@@ -17,7 +17,9 @@ from sissaschool_xmlschema_spark.operators.identity import keyref_violations
 from sissaschool_xmlschema_spark.plans.runner import validate
 from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
 
-COLLECTION_DIR = "/root/reference/tests/test_cases/examples/collection"
+from conftest import REFERENCE_CASES
+
+COLLECTION_DIR = f"{REFERENCE_CASES}/examples/collection"
 
 OBJECT2_DDL = (
     "collection_id string, id string, available string, position string, "

@@ -18,6 +18,8 @@ from sissaschool_xmlschema_spark.spec_io import (
     spec_to_dict,
 )
 
+from conftest import REFERENCE_CASES
+
 TS = dt.datetime(2024, 1, 1)
 SCHEMA_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -283,7 +285,7 @@ def test_spark_schema_from_xsd_document(spark):
     """SparkSchema('doc.xsd') is the reference's own front door
     (XMLSchema('doc.xsd'), schemas.py:149): DataFrame validation AND the
     raw-instance methods work from one object."""
-    vb = "/root/reference/tests/test_cases/examples/vehicles"
+    vb = f"{REFERENCE_CASES}/examples/vehicles"
     sch = SparkSchema(f"{vb}/vehicles.xsd", table="car")
     df = spark.createDataFrame(
         [(1, 0, "Porsche", "911")],

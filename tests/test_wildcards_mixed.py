@@ -12,6 +12,8 @@ from sissaschool_xmlschema_spark.sources.xml_instance import (
 )
 from sissaschool_xmlschema_spark.xsd_compile import Wildcard, compile_xsd
 
+from conftest import REFERENCE_CASES
+
 WILDCARD_XSD = """<?xml version="1.0"?>
 <xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema"
            targetNamespace="urn:t" xmlns="urn:t"
@@ -127,7 +129,7 @@ def test_mixed_reference_case_data4(spark):
     """features/decoder/data4-mixed.xml against mixed-content.xsd
     (testfiles:38-39): container-level mixed text among repeated simple
     children — 0 errors, exact reference parity."""
-    base = "/root/reference/tests/test_cases/features/decoder"
+    base = f"{REFERENCE_CASES}/features/decoder"
     c = compile_xsd(f"{base}/mixed-content.xsd")
     assert "data" in c.mixed_containers
     assert count_errors(spark, f"{base}/data4-mixed.xml", c) == 0

@@ -1,6 +1,6 @@
 """XML-instance validation against reference example schemas/instances —
 exact --errors=N parity with the reference testfiles
-(/root/reference/tests/test_cases/testfiles:11-26; factory
+(the reference's tests/test_cases/testfiles:11-26; factory
 xmlschema/testing/_factory.py:11-42)."""
 
 import pytest
@@ -12,10 +12,12 @@ from sissaschool_xmlschema_spark.sources.xml_instance import (
 )
 from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
 
-VB = "/root/reference/tests/test_cases/examples/vehicles"
-CB = "/root/reference/tests/test_cases/examples/collection"
+from conftest import REFERENCE_CASES
 
-IB = "/root/reference/tests/test_cases/issues"
+VB = f"{REFERENCE_CASES}/examples/vehicles"
+CB = f"{REFERENCE_CASES}/examples/collection"
+
+IB = f"{REFERENCE_CASES}/issues"
 
 CASES = [
     # issue_008: both xs:choice branches present -> one mutual-exclusion
@@ -39,8 +41,8 @@ CASES = [
     (f"{IB}/issue_029/issue_029-3.xml", f"{IB}/issue_029/issue_029.xsd", 1),
     # features/models: 0 comments (min 4) + 6 names (max 3) is ONE
     # ModelVisitor error at the broken <data> container (testfiles:64)
-    ("/root/reference/tests/test_cases/features/models/model1.xml",
-     "/root/reference/tests/test_cases/features/models/models.xsd", 1),
+    (f"{REFERENCE_CASES}/features/models/model1.xml",
+     f"{REFERENCE_CASES}/features/models/models.xsd", 1),
     # issue_035: xs:int lexical on a row field
     (f"{IB}/issue_035/dates.xml", f"{IB}/issue_035/dates.xsd", 1),
     (f"{IB}/issue_073/issue_073-1.xml", f"{IB}/issue_073/issue_073.xsd", 0),
@@ -67,8 +69,8 @@ CASES = [
     # pattern — \\A..\\z anchoring, not ^..$)
     (f"{IB}/issue_223/issue_223.xml", f"{IB}/issue_223/issue_223.xsd", 1),
     # mixed content (features/decoder, testfiles:38-39)
-    ("/root/reference/tests/test_cases/features/decoder/data4-mixed.xml",
-     "/root/reference/tests/test_cases/features/decoder/mixed-content.xsd",
+    (f"{REFERENCE_CASES}/features/decoder/data4-mixed.xml",
+     f"{REFERENCE_CASES}/features/decoder/mixed-content.xsd",
      0),
 ]
 
@@ -81,7 +83,7 @@ def test_reference_instance_error_counts(spark, xml, xsd, expected):
     assert count_errors(spark, xml, xsd) == expected
 
 
-FB = "/root/reference/tests/test_cases/features"
+FB = f"{REFERENCE_CASES}/features"
 
 # Every remaining testfiles XML instance (the valid ones expect 0 errors;
 # r5 closes the full 57-instance sweep): version-aware cases, schema
@@ -253,7 +255,7 @@ def test_xml_instance_tables_decode(spark):
         "Harley-Davidson", "Yamaha"}
 
 
-MB = "/root/reference/tests/test_cases/examples/menù"
+MB = f"{REFERENCE_CASES}/examples/menù"
 
 
 def test_menu_simple_row_tables(spark):
@@ -344,7 +346,7 @@ def test_patterns_feature_case_exact_errors(spark):
     uniqueness."""
     from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
 
-    base = "/root/reference/tests/test_cases/features/patterns"
+    base = f"{REFERENCE_CASES}/features/patterns"
     c = compile_xsd(f"{base}/patterns.xsd")
     v = validate_xml_instance(spark, f"{base}/patterns.xml", c)
     got = sorted(
@@ -370,7 +372,7 @@ def test_decoder_data2_exact_errors(spark):
     (config's pattern rejects 'foo alternative')."""
     from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
 
-    base = "/root/reference/tests/test_cases/features/decoder"
+    base = f"{REFERENCE_CASES}/features/decoder"
     c = compile_xsd(f"{base}/simple-types.xsd")
     assert "data" in c.doc_rows
     # simpleContent row element: text + attribute columns
@@ -393,7 +395,7 @@ def test_list_types_exact_errors(spark):
     validation; ' 10 20 30 ' passes (whiteSpace collapse before split)."""
     from sissaschool_xmlschema_spark.xsd_compile import compile_xsd
 
-    base = "/root/reference/tests/test_cases/features/derivations"
+    base = f"{REFERENCE_CASES}/features/derivations"
     c = compile_xsd(f"{base}/list_types.xsd")
     v = validate_xml_instance(spark, f"{base}/list_types.xml", c)
     vals = sorted(r["offending_value"] for r in v.collect())
@@ -726,7 +728,7 @@ def test_malformed_schema_document_is_compile_error():
 
     try:
         compile_xsd(
-            "/root/reference/tests/test_cases/resources/malformed.xsd"
+            f"{REFERENCE_CASES}/resources/malformed.xsd"
         )
     except XsdCompileError as e:
         assert "not well-formed" in str(e)
@@ -738,7 +740,7 @@ def test_binary_length_counts_octets(spark):
     """length facets on hexBinary/base64Binary count decoded OCTETS
     (decoder simple-types.xsd hexCode length=4 admits 'AABBCCDD'):
     data.xml validates clean, data2.xml keeps its pinned --errors=2."""
-    B = "/root/reference/tests/test_cases/features/decoder"
+    B = f"{REFERENCE_CASES}/features/decoder"
     assert count_errors(spark, f"{B}/data.xml",
                         f"{B}/simple-types.xsd") == 0
     assert count_errors(spark, f"{B}/data2.xml",
@@ -749,7 +751,7 @@ def test_declared_encoding_honored(spark):
     """A legal CP1252 document (examples/menù-cp1252) validates clean:
     schema read, prolog sniffers, and the Spark XML charset all honor the
     DECLARED encoding instead of assuming UTF-8."""
-    d = "/root/reference/tests/test_cases/examples/menù/"
+    d = f"{REFERENCE_CASES}/examples/menù/"
     assert count_errors(spark, f"{d}menù.xml", f"{d}menù.xsd") == 0
     assert count_errors(
         spark, f"{d}menù-cp1252.xml", f"{d}menù-cp1252.xsd"
@@ -901,3 +903,167 @@ def test_unknown_declared_codec_is_one_violation(spark, tmp_path):
              r["offending_value"]) for r in rows] == [
         ("files.xml", "files", "structure:unknown-encoding",
          "x-no-such-codec")]
+
+
+# --- every overlay kind, pinned with exact rows ----------------------------
+# Each schema below exercises one overlay kind on the instance reader.  Row
+# ordinals (turn_idx) count within the rows the overlay selects, in
+# document order; structural rows carry no ordinal.
+
+ALT_XSD = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:complexType name="baseT">
+    <xs:attribute name="kind" type="xs:string"/>
+    <xs:attribute name="id" type="xs:string" use="required"/>
+  </xs:complexType>
+  <xs:complexType name="xT"><xs:complexContent><xs:extension base="baseT">
+    <xs:attribute name="x" type="xs:string" use="required"/>
+  </xs:extension></xs:complexContent></xs:complexType>
+  <xs:complexType name="yT"><xs:complexContent><xs:extension base="baseT">
+    <xs:attribute name="y" type="xs:string" use="required"/>
+  </xs:extension></xs:complexContent></xs:complexType>
+  <xs:element name="doc"><xs:complexType><xs:sequence>
+    <xs:element name="node" type="baseT" maxOccurs="unbounded">
+      <xs:alternative test="@kind='x'" type="xT"/>
+      <xs:alternative test="@kind='x'" type="yT"/>
+      <xs:alternative test="@kind='y'" type="yT"/>
+      %s
+    </xs:element>
+  </xs:sequence></xs:complexType></xs:element>
+</xs:schema>"""
+
+ALT_DOC = (
+    '<doc><node id="n0" kind="x" x="1"/><node id="n1" kind="x"/>'
+    '<node id="n2" kind="y" y="2"/><node id="n3" kind="z" x="3"/>'
+    '<node kind="y"/></doc>'
+)
+
+# rows n0, n1 match the first arm (xT): the second kind='x' arm (yT) never
+# sees them.  n2 and the id-less row match the kind='y' arm (yT).
+ALT_ARM_ROWS = [
+    # n1 is row 1 of the xT arm and lacks the arm-only required @x
+    ("alt.xml", 1, "node/x", "facet:x:Required", None,
+     "missing required value for 'x'"),
+    # the id-less row is row 1 of the kind='y' arm: base @id and arm @y
+    ("alt.xml", 1, "node/id", "facet:id:Required", None,
+     "missing required value for 'id'"),
+    ("alt.xml", 1, "node/y", "facet:y:Required", None,
+     "missing required value for 'y'"),
+]
+
+
+def test_alternative_arms_first_match_wins(spark, tmp_path):
+    """XSD 1.1 xs:alternative arms (elements.py:1338-1361): the first
+    matching arm types the row, an arm-only Required is flagged, and a row
+    no arm matches (n3, kind='z') falls back to the declared baseT, where
+    its @x is undeclared."""
+    c = compile_xsd(ALT_XSD % "", version="1.1")
+    assert len(c.alt_overlays["node"]) == 3
+    p = tmp_path / "alt.xml"
+    p.write_text(ALT_DOC)
+    assert _rows(validate_xml_instance(spark, str(p), c)) == sorted(
+        ALT_ARM_ROWS + [
+            ("alt.xml", None, "doc/node", "structure:undeclared-attribute",
+             "3", "undeclared attribute 'x' on 'node' "
+             "(cvc-complex-type.3.2.2)"),
+        ], key=repr)
+
+
+def test_alternative_default_arm_takes_unmatched_rows(spark, tmp_path):
+    """An unconditional final arm types every row the tests leave over:
+    n3 is row 0 of the default yT arm, so it misses @y and its @x is
+    undeclared in yT."""
+    c = compile_xsd(ALT_XSD % '<xs:alternative type="yT"/>', version="1.1")
+    assert len(c.alt_overlays["node"]) == 4
+    p = tmp_path / "alt.xml"
+    p.write_text(ALT_DOC)
+    assert _rows(validate_xml_instance(spark, str(p), c)) == sorted(
+        ALT_ARM_ROWS + [
+            ("alt.xml", 0, "node/y", "facet:y:Required", None,
+             "missing required value for 'y'"),
+            ("alt.xml", None, "doc/node", "structure:undeclared-attribute",
+             "3", "undeclared attribute 'x' on 'node' "
+             "(cvc-complex-type.3.2.2)"),
+        ], key=repr)
+
+
+NESTED_XSI_XSD = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:complexType name="ItemT">
+    <xs:attribute name="a" type="xs:string"/>
+  </xs:complexType>
+  <xs:complexType name="SpecialT"><xs:complexContent>
+    <xs:extension base="ItemT">
+      <xs:attribute name="b" type="xs:string" use="required"/>
+    </xs:extension></xs:complexContent></xs:complexType>
+  <xs:element name="doc"><xs:complexType><xs:sequence>
+    <xs:element name="rec" maxOccurs="unbounded">
+      <xs:complexType><xs:sequence>
+        <xs:element name="item" type="ItemT" maxOccurs="unbounded"/>
+      </xs:sequence></xs:complexType>
+    </xs:element>
+  </xs:sequence></xs:complexType></xs:element>
+</xs:schema>"""
+
+
+def test_xsi_type_on_nested_rows_under_any_prefix(spark, tmp_path):
+    """xsi:type on a NESTED table's rows with the XSI namespace bound to
+    'b:' (the issue_314 shape): the SpecialT overlay validates the typed
+    rows in the composite per-parent scope, b:type is machinery (never
+    undeclared), and an unknown type is flagged once."""
+    c = compile_xsd(NESTED_XSI_XSD)
+    assert c.nested_tables["item"].parent_table == "rec"
+    assert list(c.xsi_overlays["item"]) == ["SpecialT"]
+    p = tmp_path / "nest.xml"
+    p.write_text(
+        '<doc xmlns:b="http://www.w3.org/2001/XMLSchema-instance">'
+        '<rec><item a="1"/><item b:type="SpecialT" a="2" b="x"/></rec>'
+        '<rec><item b:type="SpecialT" a="3"/>'
+        '<item b:type="Mystery" a="4"/></rec></doc>'
+    )
+    assert _rows(validate_xml_instance(spark, str(p), c)) == sorted([
+        # second rec (scope nest.xml#1), its item 0 lacks SpecialT's @b
+        ("nest.xml#1", 0, "item@SpecialT/b", "facet:b:Required", None,
+         "missing required value for 'b'"),
+        ("nest.xml", None, "doc/item", "structure:unknown-xsi-type",
+         "Mystery", "xsi:type on 'item' does not resolve to a compiled "
+         "type (elements.py:657-682)"),
+    ], key=repr)
+
+
+SUBST_UNIQUE_XSD = """<?xml version="1.0"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:complexType name="ProductType">
+    <xs:attribute name="sku" type="xs:string" use="required"/>
+  </xs:complexType>
+  <xs:complexType name="WidgetType"><xs:complexContent>
+    <xs:extension base="ProductType">
+      <xs:attribute name="serial" type="xs:ID"/>
+    </xs:extension></xs:complexContent>
+  </xs:complexType>
+  <xs:element name="product" type="ProductType"/>
+  <xs:element name="widget" type="WidgetType" substitutionGroup="product"/>
+  <xs:element name="catalog"><xs:complexType><xs:sequence>
+    <xs:element ref="product" maxOccurs="unbounded"/>
+  </xs:sequence></xs:complexType></xs:element>
+</xs:schema>"""
+
+
+def test_substitution_member_only_unique(spark, tmp_path):
+    """A member-only identity (the xs:ID uniqueness of WidgetType's
+    @serial, absent from the head's ProductType) runs on the member rows
+    alone: the repeated s1 is one violation on 'widget'."""
+    c = compile_xsd(SUBST_UNIQUE_XSD)
+    assert list(c.subst_overlays["product"]) == ["widget"]
+    assert not c.specs["product"].identities
+    p = tmp_path / "sub.xml"
+    p.write_text(
+        '<catalog><product sku="p"/><widget sku="a" serial="s1"/>'
+        '<widget sku="b" serial="s2"/><widget sku="c" serial="s1"/>'
+        '<product sku="q"/></catalog>'
+    )
+    assert _rows(validate_xml_instance(spark, str(p), c)) == [
+        ("sub.xml", None, "widget", "unique:serial-id-unique", "s1",
+         "duplicated value (s1) for identity constraint 'serial-id-unique' "
+         "(2 times)"),
+    ]

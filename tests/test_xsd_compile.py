@@ -13,6 +13,8 @@ from sissaschool_xmlschema_spark.xsd_compile import (
     xsd_to_spec,
 )
 
+from conftest import REFERENCE_CASES
+
 XS = 'xmlns:xs="http://www.w3.org/2001/XMLSchema"'
 
 
@@ -288,7 +290,7 @@ def test_builtin_lexical_spec_io_roundtrip(row_spec):
     assert back == row_spec
 
 
-VEHICLES_DIR = "/root/reference/tests/test_cases/examples/vehicles"
+VEHICLES_DIR = f"{REFERENCE_CASES}/examples/vehicles"
 
 
 def test_include_chain_with_cycle():
@@ -609,7 +611,7 @@ def test_simple_content_restriction_of_complex_base():
     """issue_013-1.xsd: restriction of a complexType base keeps the base's
     attribute declarations and narrows the text."""
     c = compile_xsd(
-        "/root/reference/tests/test_cases/issues/issue_013/issue_013.xsd"
+        f"{REFERENCE_CASES}/issues/issue_013/issue_013.xsd"
     )
     sp = c.spec("LegalType")
     by = {col.name: col for col in sp.columns}
@@ -697,8 +699,8 @@ def test_alternative_arm_outside_subset_is_loud():
     """)
     c = compile_xsd(src, version="1.1")
     arms = c.alt_overlays.get("node", ())
-    assert len(arms) == 1 and arms[0]["attr"] == "kind" \
-        and arms[0]["value"] == "x"
+    assert len(arms) == 1 and arms[0].attr == "kind" \
+        and arms[0].value == "x"
     assert any("outside" in r and "alternative" in r for r in c.restrictions)
 
 
@@ -769,3 +771,23 @@ def test_nillable_emits_nil_column_and_conditional_required():
     req = [f for f in cols["v"].facets if isinstance(f, S.Required)]
     assert req and req[0].when and "v__nil" in req[0].when
     assert any(isinstance(f, S.Nillable) for f in cols["v"].facets)
+
+
+def test_latin1_schema_document_names_decode_once(tmp_path):
+    """A schema document declaring ISO-8859-1 is decoded by its declaration
+    exactly once: the compiler names the table 'menù' (not the mojibake of
+    a second decode) and the schema-document validator reads the file
+    instead of failing on its non-UTF-8 bytes."""
+    from sissaschool_xmlschema_spark.xsd_meta import validate_schema_document
+
+    p = tmp_path / "menu-latin1.xsd"
+    p.write_bytes("""<?xml version="1.0" encoding="ISO-8859-1"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:element name="menu"><xs:complexType><xs:sequence>
+    <xs:element name="menù" maxOccurs="unbounded"><xs:complexType>
+      <xs:attribute name="prezzo" type="xs:decimal"/>
+    </xs:complexType></xs:element>
+  </xs:sequence></xs:complexType></xs:element>
+</xs:schema>""".encode("iso-8859-1"))
+    assert sorted(compile_xsd(str(p)).specs) == ["menù"]
+    assert validate_schema_document(str(p)) == ()

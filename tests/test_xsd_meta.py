@@ -13,7 +13,9 @@ from sissaschool_xmlschema_spark.xsd_meta import (
     validate_schema_document,
 )
 
-B = "/root/reference/tests/test_cases"
+from conftest import REFERENCE_CASES
+
+B = REFERENCE_CASES
 
 # (path, version, expected errors) — straight from the testfiles manifest
 ERROR_CASES = [
